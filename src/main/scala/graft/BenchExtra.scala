@@ -92,8 +92,8 @@ object BenchExtra {
           val t2 = System.nanoTime()
           execMin = math.min(execMin, (t2 - t1) / 1e9)
         }
-        // listener events are async; give the bus a moment before reading
-        Thread.sleep(300)
+        // listener events are async: wait until the bus delivered them all
+        org.apache.spark.graft.GraftListenerBus.drain(spark.sparkContext, 60000L)
         println(f"$name%-30s $buildS%8.3f $execMin%8.3f ${l.jobs}%5d ${l.stages}%7d ${l.tasks}%6d ${l.stageTimeMs / 1e3}%9.2f")
       } catch {
         case e: Throwable =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gen.TranscriptGen
 import graft.io.ParquetPartitionedSource
-import graft.transcript.{StatsProfiler, TranscriptSuiteConfig, TranscriptValidator}
+import graft.transcript.{StatsProfiler, TranscriptValidator}
 import java.nio.file.{Files, Paths}
 
 /** Two-cluster-size scaling evidence (BASELINE.md protocol): the transcript
@@ -79,7 +79,7 @@ object ScalingBench {
       val data = spark.read.option("basePath", dataDir).parquet(dataDir)
       val keys = spark.read.parquet(convKeysPath)
       val t0 = System.nanoTime()
-      val report = new TranscriptValidator(TranscriptSuiteConfig())
+      val report = new TranscriptValidator()
         .validate(data, Some(keys))
       val nV = report.violations.count()
       val nP = report.partitionVerdicts.count()
@@ -95,7 +95,7 @@ object ScalingBench {
     val statsPredIters = 5
     def statsPred(spark: SparkSession, cached: DataFrame): Double = {
       val t0 = System.nanoTime()
-      val v = new TranscriptValidator(TranscriptSuiteConfig(persistSeq = false))
+      val v = new TranscriptValidator()
       var i = 0
       while (i < statsPredIters) {
         // fused operator: per-constraint violation counts + 6-column stats

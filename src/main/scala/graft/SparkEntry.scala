@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.schema.{Cmd, CompiledSchema, Op}
 import graft.expr.ExprCompiler
-import graft.validate.{Validator, ValidatorConfig}
+import graft.validate.Validator
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 import graft.transcript.{StatsProfiler, TranscriptValidator}
 
@@ -117,10 +117,10 @@ object SparkEntry {
     * fixtures, as ONE scan (explode of 1-or-2 ids) instead of a
     * self-union that scans the table twice. */
   private def injectDups(df: DataFrame, idCol: String, mod: Int): DataFrame = {
-    val rest = df.columns.filter(_ != idCol).map(col)
-    df.select((explode(
+    val ids = explode(
       when(col(idCol) % mod === 0, array(col(idCol), col(idCol) + 10000000L))
-        .otherwise(array(col(idCol)))).as(idCol) +: rest): _*)
+        .otherwise(array(col(idCol)))).as(idCol)
+    df.select(df.columns.map(c => if (c == idCol) ids else col(c)): _*)
   }
 
   /** Documents with injected exact duplicates: rows with doc_id % 17 == 0
@@ -159,7 +159,7 @@ object SparkEntry {
     val ev = events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
       .withColumn("_row", col("event_id")) // natural key as violation anchor
-    new Validator(CompiledSchema.load(eventArtifact), ValidatorConfig(abortOnEmpty = false))
+    new Validator(CompiledSchema.load(eventArtifact))
       .validate("Event", ev).violations
   }
 
@@ -285,7 +285,7 @@ object SparkEntry {
           |  "event_id": {"type": "Number"}, "value": {"type": "String"}}}}}""".stripMargin)
       val ev = events(s, dir).select(col("event_id"), col("value"))
         .withColumn("_row", col("event_id"))
-      new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+      new Validator(schema)
         .validate("Event", ev).survivors.get
     }),
 
@@ -296,7 +296,7 @@ object SparkEntry {
           |  "event_id": {"type": "Number"}, "event_type": {"type": "String"}}}}}""".stripMargin)
       val ev = events(s, dir).select(col("event_id"), col("event_type"))
         .withColumn("_row", col("event_id"))
-      new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+      new Validator(schema)
         .validate("Event", ev).survivors.get
     }),
 
@@ -307,7 +307,7 @@ object SparkEntry {
           |  "event_id": {"type": "Number"}, "dup_key": {"type": "Number"}}}}}""".stripMargin)
       val ev = events(s, dir).select(col("event_id"), (col("event_id") % 500).as("dup_key"))
         .withColumn("_row", col("event_id"))
-      new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+      new Validator(schema)
         .validate("Event", ev).violations
         .filter(col("err") === "NonUniqueSubIndex")
         .select(col("err"), col("row").as("row_id"), col("col").as("col_name"))
@@ -321,7 +321,7 @@ object SparkEntry {
       val ev = events(s, dir).select(
         col("event_id").as("k1"), (col("event_id") + 1).as("k2"),
         col("event_id").as("_row"))
-      new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+      new Validator(schema)
         .validate("Event", ev).violations
         .filter(col("err") === "IndexConflict")
         .select(col("err"), col("row").as("row_id"), col("col").as("col_name"))
@@ -351,8 +351,7 @@ object SparkEntry {
 
     // == transcript suite: per-conversation verdicts ==
     "q_conv_verdicts" -> ((s, dir) => {
-      val v = new TranscriptValidator(
-        graft.transcript.TranscriptSuiteConfig(persistSeq = false))
+      val v = new TranscriptValidator()
       v.convVerdicts(v.seqTable(transcripts(s, dir)))
         .select(col("conv_id"), col("n_turns"), col("n_rows"), col("min_turn"),
           col("max_turn"), col("n_dup_keys"), col("n_gaps"), col("pass"))

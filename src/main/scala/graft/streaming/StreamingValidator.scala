@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.transcript.{TranscriptSuiteConfig, TranscriptValidator}
+import graft.transcript.TranscriptValidator
 
 /** Structured Streaming leg of the engine: continuous validation of a
   * transcript stream. The reference is batch-only (SURVEY §2.5 —
@@ -17,20 +17,18 @@ import graft.transcript.{TranscriptSuiteConfig, TranscriptValidator}
   *    mode;
   *  - '''windowed violation counts''' — watermarked tumbling-window counts
   *    per constraint for monitoring/alerting;
-  *  - '''stateful sequence check''' — per-conversation
-  *    `flatMapGroupsWithState` tracking the max turn_idx committed by
-  *    EARLIER micro-batches: emits a violation for a turn at or below
-  *    that max (cross-batch replay/regression) or duplicated within its
-  *    own batch — the streaming analogue of the batch dup-key check with
-  *    bounded state (one int per live conversation).
+  *  - '''stateful transcript check''' — per-conversation
+  *    `flatMapGroupsWithState` carrying the highest committed turn and the
+  *    last observed event time ACROSS micro-batches: the streaming
+  *    analogue of the batch dup-key, sequence-gap and ts-monotone checks
+  *    with bounded state (one small tuple per live conversation).
   */
 object StreamingValidator {
 
   /** Row-level violations on a streaming transcript DataFrame — reuses the
     * batch predicate compiler verbatim (stateless, append-safe). */
-  def rowViolations(stream: DataFrame,
-                    cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()): DataFrame =
-    new TranscriptValidator(cfg).rowViolations(stream)
+  def rowViolations(stream: DataFrame): DataFrame =
+    new TranscriptValidator().rowViolations(stream)
 
   /** Watermarked tumbling-window violation counts per constraint
     * (append-mode monitoring stream). Rows with a NULL event time are
@@ -42,9 +40,8 @@ object StreamingValidator {
     * no watermark, and always emits the NullTs violation. */
   def windowedViolationCounts(stream: DataFrame, tsCol: String = "ts",
                               watermark: String = "10 minutes",
-                              windowLen: String = "5 minutes",
-                              cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()): DataFrame =
-    new TranscriptValidator(cfg)
+                              windowLen: String = "5 minutes"): DataFrame =
+    new TranscriptValidator()
       .rowViolations(
         stream.filter(col(tsCol).isNotNull).withColumn("_event_ts", col(tsCol)),
         extraCols = Seq("_event_ts"))
@@ -52,8 +49,7 @@ object StreamingValidator {
       .groupBy(window(col("_event_ts"), windowLen), col("constraint_id"))
       .agg(count(lit(1)).as("n"))
 
-  final case class TurnEvent(conv_id: String, turn_idx: Int)
-  /** Turn event with an optional event time for the full stateful check. */
+  /** Input event of [[statefulTranscriptCheck]]; `ts` may be absent. */
   final case class TsTurnEvent(conv_id: String, turn_idx: Int,
                                ts: Option[java.sql.Timestamp])
   final case class DupViolation(conv_id: String, turn_idx: Int, kind: String)
@@ -64,89 +60,6 @@ object StreamingValidator {
     * `_prev_max_ts`: last observed in TURN order, not a running max, so
     * one forward-skewed clock doesn't flag every later turn). */
   final case class SeqCheckState(maxTurn: Int, lastTsMillis: Option[Long])
-
-  /** Stateful duplicate/regression detector: state = max turn_idx per
-    * conversation, carried ACROSS micro-batches. Emits `dup_or_regression`
-    * for a turn at or below the max committed by earlier batches
-    * (cross-batch replays/regressions) and for turns duplicated within
-    * the current batch. Events are sorted per batch first: the group
-    * iterator's order after the shuffle is nondeterministic, so in-batch
-    * arrival order carries no signal — treating it as meaningful flagged
-    * spurious regressions that varied run to run. State starts EMPTY
-    * (Option, no -1 sentinel): a legitimate negative turn_idx must not
-    * collide with an "already seen" marker on first contact.
-    * State is one Int per live conversation; `idleTimeoutMs > 0` retires
-    * conversations idle longer than that (pass 0 for bounded backfills
-    * driven by `Trigger.AvailableNow`).
-    *
-    * Per-(conversation, micro-batch) memory is capped: at most
-    * `maxEventsPerBatch` events are buffered for the sorted dup check —
-    * the `maxEventsPerBatch` SMALLEST turn indices, kept in a bounded
-    * max-heap, so the buffered subset is a function of the batch's event
-    * MULTISET, not of shuffle-arrival order (a first-N-arrival buffer
-    * would emit different violations on a checkpoint-recovery replay of
-    * the same batch — the nondeterminism the per-batch sort exists to
-    * eliminate; heap ties are interchangeable because equal TurnEvents
-    * are identical). One hot conversation in a `Trigger.AvailableNow`
-    * backfill batch used to materialize ALL its events on one task; now
-    * the evicted tail costs O(1) memory — its running max still feeds the
-    * state (so cross-batch detection stays exact for later batches) but
-    * evicted events are not individually dup-checked. That unchecked tail
-    * is surfaced, not swallowed: one `batch_overflow` violation per
-    * (conversation, batch) whose `turn_idx` field carries the count of
-    * unchecked events (consumers must discriminate on `kind` — an
-    * overflow row is a capacity verdict, not a turn reference). */
-  def statefulSequenceCheck(turns: Dataset[TurnEvent],
-                            idleTimeoutMs: Long = 3600000L,
-                            maxEventsPerBatch: Int = 1 << 20): Dataset[DupViolation] = {
-    // NOT a delegate to statefulTranscriptCheck: that would change this
-    // check's state type from Int to SeqCheckState and break restore of
-    // every existing streaming checkpoint (the state store schema check
-    // fails at restart, forcing a wipe). Existing deployments keep their
-    // Int state; new deployments wanting gaps/ts-monotonicity start on
-    // statefulTranscriptCheck.
-    require(maxEventsPerBatch >= 1, s"maxEventsPerBatch must be >= 1, got $maxEventsPerBatch")
-    import turns.sparkSession.implicits._
-    val timeoutMode =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    turns.groupByKey(_.conv_id)
-      .flatMapGroupsWithState[Int, DupViolation](OutputMode.Append, timeoutMode) {
-        (convId: String, events: Iterator[TurnEvent], state: GroupState[Int]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var maxSeen: Option[Int] = state.getOption
-            // bounded max-heap of the smallest turn indices: deterministic
-            // in the batch's event multiset, O(cap) memory, O(n log cap)
-            val heap = scala.collection.mutable.PriorityQueue.empty[Int]
-            var overflowCount = 0L
-            var overflowMax = Int.MinValue
-            while (events.hasNext) {
-              val t = events.next().turn_idx
-              if (heap.size < maxEventsPerBatch) heap.enqueue(t)
-              else {
-                val evicted = if (t < heap.head) { val h = heap.dequeue(); heap.enqueue(t); h } else t
-                overflowCount += 1
-                if (evicted > overflowMax) overflowMax = evicted
-              }
-            }
-            val out = heap.dequeueAll.toSeq.reverse.flatMap { (t: Int) =>
-              if (maxSeen.exists(t <= _))
-                Some(DupViolation(convId, t, "dup_or_regression"))
-              else { maxSeen = Some(t); None }
-            }
-            val overflow =
-              if (overflowCount > 0) {
-                maxSeen = Some(maxSeen.fold(overflowMax)(math.max(_, overflowMax)))
-                // Int cap is safe: a single group slice can't exceed 2^31 rows
-                Seq(DupViolation(convId, overflowCount.toInt, "batch_overflow"))
-              } else Nil
-            maxSeen.foreach(state.update)
-            if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-            (out ++ overflow).iterator
-          }
-      }
-  }
 
   /** Full stateful transcript check: the streaming analogue of the batch
     * leg's DupKey + SeqGap + TsMonotone (TranscriptValidator.seqTable /

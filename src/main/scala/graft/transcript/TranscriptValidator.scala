@@ -24,16 +24,6 @@ object Constraints {
     RoleEnum, NullText, NullTs, ToolRole, DupKey, SeqGap, TsMonotone, OrphanConv)
 }
 
-final case class TranscriptSuiteConfig(
-    roles: Seq[String] = Seq("system", "user", "assistant", "tool"),
-    /** partition count used when no partition_id column is present */
-    derivedPartitions: Int = 8,
-    partitionIdCol: String = "partition_id",
-    /** persist the reduced per-turn sequence table so the three consumers
-      * (violations, conv verdicts, referential) don't re-shuffle the raw
-      * input; disable for plan-shape inspection */
-    persistSeq: Boolean = true)
-
 /** @param violations (constraint_id, conv_id, turn_idx, column, observed,
   *   expected, partition_id) — the typed violation rows of the north rule.
   * @param convVerdicts per-conversation check results.
@@ -73,22 +63,27 @@ final case class TranscriptReport(
   *     left-anti-joined against the conversation key table (broadcast when
   *     small).
   *
-  * The sequence table from steps 2-3 is persisted (MEMORY_AND_DISK) so the
-  * violation, verdict, and referential consumers run against materialized
-  * state instead of re-shuffling the raw input.
+  * [[validate]] persists (MEMORY_AND_DISK) the sequence table from steps
+  * 2-3, so the violation, verdict, and referential consumers run against
+  * materialized state instead of re-shuffling the raw input, and the
+  * sparse violations, so the per-partition rollup does not re-run the
+  * suite; call the report's `cleanup` once it is consumed. The step
+  * methods ([[seqTable]], [[convVerdicts]], ...) persist nothing.
+  *
+  * Rows are attributed to the input's `partition_id` column, or, when it
+  * has none, to one of [[TranscriptValidator.DerivedPartitions]] buckets
+  * hashed from `conv_id`.
   */
-class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) {
+class TranscriptValidator {
   import Constraints._
+  import TranscriptValidator._
 
   private val vioCols = Seq("constraint_id", "conv_id", "turn_idx", "column", "observed", "expected", "partition_id")
 
-  private def partId(df: DataFrame): Column =
-    if (df.columns.contains(cfg.partitionIdCol)) col(cfg.partitionIdCol)
-    else pmod(xxhash64(coalesce(col("conv_id"), lit(""))), lit(cfg.derivedPartitions)).cast("int")
-
   private def withPartId(df: DataFrame): DataFrame =
-    if (df.columns.contains(cfg.partitionIdCol)) df
-    else df.withColumn(cfg.partitionIdCol, partId(df))
+    if (df.columns.contains("partition_id")) df
+    else df.withColumn("partition_id",
+      pmod(xxhash64(coalesce(col("conv_id"), lit(""))), lit(DerivedPartitions)).cast("int"))
 
   /** Violation struct: built only for failing checks via filter+explode. */
   private def vioStruct(id: String, pass: Column, column: String,
@@ -104,7 +99,7 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
                            extraCols: Seq[String] = Nil): DataFrame =
     df.where(fails.reduce(_ || _))
       .select(
-        (Seq(col("conv_id"), col("turn_idx"), col(cfg.partitionIdCol).as("partition_id"),
+        (Seq(col("conv_id"), col("turn_idx"), col("partition_id"),
           filter(array(structs: _*), s => !s.getField("pass")).as("_fails")) ++
           extraCols.map(col)): _*)
       .select(
@@ -127,7 +122,6 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
     * predicates must be null-free: a NULL verdict would be silently
     * dropped by explodeFails' filter AND pass a survivors filter. */
   private def rowChecks: Seq[RowCheck] = {
-    val roles = cfg.roles
     def chk(id: String, pass: Column, column: String,
             observed: Column, expected: Column) =
       RowCheck(id, pass, vioStruct(id, pass, column, observed, expected))
@@ -140,8 +134,8 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
         col("turn_idx"), lit("turn_idx >= 0")),
       chk(NullRole, col("role").isNotNull, "role",
         lit(null).cast("string"), lit("non-null")),
-      chk(RoleEnum, col("role").isNull || col("role").isin(roles: _*), "role",
-        col("role"), lit(roles.mkString("|"))),
+      chk(RoleEnum, col("role").isNull || col("role").isin(Roles: _*), "role",
+        col("role"), lit(Roles.mkString("|"))),
       chk(NullText, col("text").isNotNull, "text",
         lit(null).cast("string"), lit("non-null")),
       chk(NullTs, col("ts").isNotNull, "ts",
@@ -204,11 +198,11 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
         // when the contract is violated first() is NONDETERMINISTIC and
         // partitionVerdicts.pass — which resumability keys off — could
         // flip between runs
-        min(col(cfg.partitionIdCol)).as(cfg.partitionIdCol))
+        min(col("partition_id")).as("partition_id"))
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))
     keyed.select(
       col("conv_id"), col("turn_idx"), col("_n"), col("_min_ts"), col("_max_ts"),
-      col(cfg.partitionIdCol),
+      col("partition_id"),
       lag(col("turn_idx"), 1).over(w).as("_prev_turn"),
       // last NON-NULL preceding _max_ts, not plain lag and not a running
       // max: lag carried NULL through an all-null-ts turn so a regression
@@ -253,7 +247,7 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
       sum(when(col("_n") > 1, 1L).otherwise(0L)).as("n_dup_keys"),
       sum(when(gapPred, 1L).otherwise(0L)).as("n_gaps"),
       sum(when(tsRegressPred, 1L).otherwise(0L)).as("n_ts_regressions"),
-      min(col(cfg.partitionIdCol)).as("partition_id")) // min, not first: see seqTable
+      min(col("partition_id")).as("partition_id")) // min, not first: see seqTable
       .withColumn("gap_free",
         col("n_gaps") === 0 && col("min_turn") === 0 &&
         col("max_turn") === col("n_turns") - 1)
@@ -297,19 +291,16 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
   /** Full suite. */
   def validate(df0: DataFrame, convKeys: Option[DataFrame] = None): TranscriptReport = {
     val df = withPartId(df0)
-    val seq0 = seqTable(df)
-    val seq = if (cfg.persistSeq) seq0.persist(StorageLevel.MEMORY_AND_DISK) else seq0
+    val seq = seqTable(df).persist(StorageLevel.MEMORY_AND_DISK)
     val verdicts = convVerdicts(seq)
     val rowV = rowViolations(df)
     val keyV = keySequenceViolations(seq)
     val refV = convKeys.map(k => referentialViolations(verdicts, k))
-    val violations0 = refV.foldLeft(rowV.union(keyV))(_ union _)
-      .select(vioCols.map(col): _*)
     // violations are sparse (error rates ~1e-3): persist them so the
     // per-partition verdict rollup doesn't re-run the whole suite
-    val violations =
-      if (cfg.persistSeq) violations0.persist(StorageLevel.MEMORY_AND_DISK)
-      else violations0
+    val violations = refV.foldLeft(rowV.union(keyV))(_ union _)
+      .select(vioCols.map(col): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // extra pass over the INPUT, but column-pruned to the single
     // partition-id column (or conv_id when derived) — on columnar sources
@@ -317,7 +308,7 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
     // seqTable aggregation instead would under-count rows with null keys
     // (excluded there) and can't be recovered from violation counts (a
     // row null in BOTH keys emits two violation rows)
-    val rowsPerPartition = df.groupBy(col(cfg.partitionIdCol).as("partition_id"))
+    val rowsPerPartition = df.groupBy(col("partition_id"))
       .agg(count(lit(1)).as("rows_scanned"))
     val vioPerPartition = violations.groupBy(col("partition_id"))
       .agg(count(lit(1)).as("violations"))
@@ -330,6 +321,14 @@ class TranscriptValidator(cfg: TranscriptSuiteConfig = TranscriptSuiteConfig()) 
 
     TranscriptReport(
       violations, verdicts, partitionVerdicts,
-      cleanup = () => if (cfg.persistSeq) { seq.unpersist(); violations.unpersist(); () })
+      cleanup = () => { seq.unpersist(); violations.unpersist(); () })
   }
+}
+
+object TranscriptValidator {
+  /** The `role_enum` constraint's allowed roles. */
+  val Roles: Seq[String] = Seq("system", "user", "assistant", "tool")
+  /** Bucket count of the `partition_id` derived from `conv_id` when the
+    * input carries none. */
+  val DerivedPartitions = 8
 }

@@ -8,19 +8,17 @@ import graft.expr.ExprCompiler
 
 import scala.collection.mutable.ListBuffer
 
-/** @param strictReferenceParity when true, skip assertions referencing more
-  *   than one column, exactly like the reference (kyepy `loader.py:121`
-  *   evaluates an assertion only when it touches exactly one edge). The
-  *   default evaluates every assertion — predicate columns make the general
-  *   case free (documented superset, SURVEY §2.4-W1).
-  * @param abortOnEmpty replicate the reference's early abort when an
-  *   intermediate table becomes empty (kyepy `loader.py:64-65,128-129,…`).
-  *   Each check is a driver-side `isEmpty` action — right for the parity
-  *   path, wrong at 10^12-row scale; the scale path
-  *   ([[graft.transcript.TranscriptValidator]]) fuses verdicts instead.
-  * @param rowIdCol name of the stable row-identity column the caller must
-  *   provide (the reference relies on the pandas positional index,
-  *   `loader.py:36-41`, which has no distributed analogue).
+/** @param strictReferenceParity when true, reproduce the reference loader
+  *   exactly: skip assertions referencing more than one column (kyepy
+  *   `loader.py:121` evaluates an assertion only when it touches exactly
+  *   one edge) and abort with `survivors = None` when a stage that dropped
+  *   something leaves the table empty (`loader.py:64-65,128-129,…`) — each
+  *   such guard is a driver-side `isEmpty` job. The default (scale path)
+  *   evaluates every assertion — predicate columns make the general case
+  *   free (documented superset, SURVEY §2.4-W1) — and never probes for
+  *   emptiness: an emptied table flows on and yields `Some(<0 rows>)`
+  *   survivors, with the same violations (later stages add none on an
+  *   empty input).
   * @param maxGroupValues hard cap on the distinct values a `many`-edge
   *   survivor array materializes per group (S6). The aggregate keeps the
   *   cap+1 SMALLEST distinct values with a bounded buffer
@@ -38,12 +36,11 @@ import scala.collection.mutable.ListBuffer
   */
 final case class ValidatorConfig(
     strictReferenceParity: Boolean = false,
-    abortOnEmpty: Boolean = true,
-    rowIdCol: String = "_row",
     maxGroupValues: Int = 10000)
 
 /** @param survivors the cleaned, index-grouped table (None = model aborted,
-  *   like the reference returning None from `Loader.load`).
+  *   like the reference returning None from `Loader.load`: no usable
+  *   column or index, or — parity mode only — a stage emptied the table).
   * @param cached intermediate stage caches backing `violations`/`survivors`
   *   — call [[cleanup]] once both are consumed so long-lived sessions
   *   (servers, multi-model runs) don't pin executor storage. */
@@ -75,10 +72,15 @@ final case class ValidationResult(
   *
   * Progressive filtering is preserved: rows failing a stage never reach
   * later stages.
+  *
+  * The input must carry the stable row-identity column `_row`
+  * ([[Validator.RowId]]): the reference relies on the pandas positional
+  * index (`loader.py:36-41`), which has no distributed analogue —
+  * [[Validator.withRowIds]] / [[Validator.withParquetRowIds]] attach one.
   */
 class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfig()) {
 
-  private val rowId = config.rowIdCol
+  import Validator.{RowId => rowId}
 
   def validate(modelName: String, input: DataFrame): ValidationResult = {
     val spark = input.sparkSession
@@ -98,8 +100,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
     // — a table that was ALREADY empty flows through to an empty survivors
     // table; only a stage that actually dropped something aborts on empty
     def emptyAbort(out: DataFrame, droppedSomething: => Boolean): Boolean =
-      config.abortOnEmpty && out.isEmpty &&
-        (!config.strictReferenceParity || droppedSomething)
+      config.strictReferenceParity && out.isEmpty && droppedSomething
 
     // ---- S1: conform columns (rename titles, drop unknown) ----------------
     val colNameMap: Map[String, String] =
@@ -143,11 +144,6 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
     }
     if (dataCols.isEmpty) return abort()
     df = cached(df)
-    // scale path: abortOnEmpty gives up on an empty stage output. Parity
-    // path: the reference aborts on emptiness only AFTER an actual drop
-    // (column drop above, row-mask drop in S4) — a clean zero-row table
-    // flows through to an EMPTY survivors table, not a None abort.
-    if (config.abortOnEmpty && !config.strictReferenceParity && df.isEmpty) return abort()
 
     // ---- S4: assertions as predicate columns ------------------------------
     val applicable = model.assertions.filter { a =>
@@ -278,8 +274,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
       // parity: the reference's post-mask empty abort (loader.py:128-129)
       // runs only when a mask actually dropped rows — an already-empty
       // table with no firing assertion flows on, it does not abort
-      if (config.abortOnEmpty && (!config.strictReferenceParity || parityAssertionFired)
-          && df.isEmpty) return abort()
+      if (parityAssertionFired && df.isEmpty) return abort()
     }
 
     // ---- S5: sub-index functional dependency ------------------------------
@@ -710,15 +705,18 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
 }
 
 object Validator {
+  /** Name of the row-identity column every [[Validator]] input carries. */
+  val RowId = "_row"
+
   /** Attach a stable 0-based row id reflecting input order (the analogue of
     * the reference's positional RangeIndex). Uses zipWithIndex — stable
     * w.r.t. partition order of the source, intended for test fixtures and
     * small CSV/JSON ingress tables; parquet ingress should use
     * [[withParquetRowIds]] (columnar, no RDD round-trip) and scale paths
     * anchor on natural keys instead. */
-  def withRowIds(df: DataFrame, rowIdCol: String = "_row"): DataFrame = {
+  def withRowIds(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val schema = StructType(df.schema.fields :+ StructField(rowIdCol, LongType, nullable = false))
+    val schema = StructType(df.schema.fields :+ StructField(RowId, LongType, nullable = false))
     val rdd = df.rdd.zipWithIndex().map { case (r, i) =>
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
     }
@@ -738,7 +736,7 @@ object Validator {
     * The file→ordinal map rides a broadcast join keyed on the metadata
     * path; a path that misses the map (would silently lose rows) raises
     * instead. */
-  def withParquetRowIds(spark: SparkSession, path: String, rowIdCol: String = "_row"): DataFrame = {
+  def withParquetRowIds(spark: SparkSession, path: String): DataFrame = {
     val base = spark.read.parquet(path)
     val withMeta = base.select(
       col("*"),
@@ -757,7 +755,7 @@ object Validator {
     val ordinals = files.zipWithIndex.map { case (f, i) => (f, i.toLong) }
       .toSeq.toDF("_g_file", "_g_ord")
     withMeta.join(broadcast(ordinals), Seq("_g_file"), "left")
-      .withColumn(rowIdCol,
+      .withColumn(RowId,
         shiftleft(
           coalesce(col("_g_ord"),
             raise_error(concat(lit("parquet row-id: unknown file "), col("_g_file")))),

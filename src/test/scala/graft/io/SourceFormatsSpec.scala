@@ -2,7 +2,7 @@ package graft.io
 
 import graft.SparkSuite
 import graft.schema.CompiledSchema
-import graft.validate.{Validator, ValidatorConfig}
+import graft.validate.Validator
 import java.nio.file.{Files, Paths}
 
 /** The reference ingests CSV / JSON / JSONL (kyepy kye.py:115-126); the
@@ -15,7 +15,7 @@ class SourceFormatsSpec extends SparkSuite {
       |  "assertions": [{"msg": "", "expr": [{"col": "id"}, {"ge": 0}]}]}}}""".stripMargin)
 
   private def validate(df: org.apache.spark.sql.DataFrame) = {
-    val r = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val r = new Validator(schema)
       .validate("User", Validator.withRowIds(df.coalesce(1)))
     (r.violations.collect().map(v => (v.getString(0), v.getLong(2))).toSet,
       r.survivors.map(_.count()).getOrElse(-1L))

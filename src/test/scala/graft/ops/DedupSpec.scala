@@ -102,4 +102,17 @@ class DedupSpec extends SparkSuite {
     val sh = documents.select(Dedup.shingles(col("text"), 3)).count()
     assert(sh == documents.count())
   }
+
+  test("duplicate injection keeps the input's column order") {
+    // an id that is not the first column must stay where it was: the
+    // oracle gate compares column order
+    val dir = java.nio.file.Files.createTempDirectory("docs-dups").toString
+    Seq(("a", 2L), ("b", 17L)).toDF("text", "doc_id")
+      .write.parquet(s"$dir/documents.parquet")
+    val injected = graft.SparkEntry.docsWithDups(spark, dir)
+    assert(injected.columns.toSeq == Seq("text", "doc_id"))
+    // doc_id % 17 == 0 rows reappear under doc_id + 10^7
+    assert(injected.as[(String, Long)].collect().sorted.toSeq ==
+      Seq(("a", 2L), ("b", 17L), ("b", 10000017L)))
+  }
 }

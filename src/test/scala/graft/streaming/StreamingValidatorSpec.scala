@@ -153,12 +153,19 @@ class StreamingValidatorSpec extends SparkSuite {
       s"100% <other> mass vs a user/assistant baseline must flag drift: ${byWindow("00:00")}")
   }
 
+  /** The dup/regression and overflow verdicts of [[StreamingValidator.statefulTranscriptCheck]]
+    * (its gap and ts verdicts are pinned by the cases below). */
+  private def dupAndOverflow(rows: Seq[(String, Int, String)]): Set[(String, Int, String)] =
+    rows.filter(r => r._3 == "dup_or_regression" || r._3 == "batch_overflow").toSet
+
+  private def ev(conv: String, turn: Int) = StreamingValidator.TsTurnEvent(conv, turn, None)
+
   test("stateful sequence check caps per-batch buffering; overflow is surfaced and max carries") {
     import spark.implicits._
-    import StreamingValidator.TurnEvent
+    import StreamingValidator.TsTurnEvent
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TurnEvent]
-    val q = StreamingValidator.statefulSequenceCheck(
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TsTurnEvent]
+    val q = StreamingValidator.statefulTranscriptCheck(
         input.toDS(), idleTimeoutMs = 0, maxEventsPerBatch = 100)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("stream_cap")
@@ -166,49 +173,50 @@ class StreamingValidatorSpec extends SparkSuite {
     try {
       // one hot conversation: 1000 clean events in a single backfill batch
       // (10x the cap) plus a clean small conversation as control
-      input.addData(((0 until 1000).map(TurnEvent("hot", _)) :+ TurnEvent("cold", 0)): _*)
+      input.addData(((0 until 1000).map(ev("hot", _)) :+ ev("cold", 0)): _*)
       q.processAllAvailable()
       // next batch: a turn at/below hot's true max (999) must STILL be
       // flagged — the overflow tail's running max fed the state
-      input.addData(TurnEvent("hot", 500), TurnEvent("cold", 1))
+      input.addData(ev("hot", 500), ev("cold", 1))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("stream_cap").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    val all = spark.table("stream_cap").collect().toSeq
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
+    val got = dupAndOverflow(all)
     assert(got.contains(("hot", 900, "batch_overflow")),
       s"900 unchecked events past the 100 cap must surface, got $got")
     assert(got.contains(("hot", 500, "dup_or_regression")),
       s"cross-batch regression below the overflow max must flag, got $got")
-    assert(!got.exists(_._1 == "cold"), s"clean conversation must stay clean: $got")
+    assert(!all.exists(_._1 == "cold"), s"clean conversation must stay clean: $all")
     assert(got.size == 2, s"no spurious violations: $got")
   }
 
   test("stateful sequence check: in-batch dups and cross-batch regressions, order-free") {
     import spark.implicits._
-    import StreamingValidator.TurnEvent
+    import StreamingValidator.TsTurnEvent
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TurnEvent]
-    val q = StreamingValidator.statefulSequenceCheck(input.toDS(), idleTimeoutMs = 0)
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TsTurnEvent]
+    val q = StreamingValidator.statefulTranscriptCheck(input.toDS(), idleTimeoutMs = 0)
       .writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("stream_state")
       .start()
     try {
       // batch 1: c1 duplicates turn 1 in-batch; c2 is clean; c3's FIRST
-      // contact is a negative turn — it must NOT be flagged (regression:
-      // a -1 "already seen" sentinel used to collide with legal negative
-      // indices). In-batch arrival order carries no signal post-shuffle,
-      // so only equality flags within a batch.
-      input.addData(TurnEvent("c1", 0), TurnEvent("c1", 1), TurnEvent("c1", 1),
-        TurnEvent("c1", 2), TurnEvent("c2", 0), TurnEvent("c2", 5), TurnEvent("c3", -2))
+      // contact is a negative turn — it must NOT be flagged as a duplicate
+      // (regression: a -1 "already seen" sentinel used to collide with
+      // legal negative indices). In-batch arrival order carries no signal
+      // post-shuffle, so only equality flags within a batch.
+      input.addData(ev("c1", 0), ev("c1", 1), ev("c1", 1),
+        ev("c1", 2), ev("c2", 0), ev("c2", 5), ev("c3", -2))
       q.processAllAvailable()
       // batch 2: c2 turn 3 arrives after turn 5 was committed by batch 1
       // -> cross-batch regression; c3 continues above its negative start
-      input.addData(TurnEvent("c2", 3), TurnEvent("c3", 0))
+      input.addData(ev("c2", 3), ev("c3", 0))
       q.processAllAvailable()
     } finally q.stop()
-    val got = spark.table("stream_state").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(got == Set(("c1", 1), ("c2", 3)))
+    val got = dupAndOverflow(spark.table("stream_state").collect().toSeq
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))))
+    assert(got.map(g => (g._1, g._2)) == Set(("c1", 1), ("c2", 3)))
   }
 
   test("stateful transcript check: sequence gaps flagged across micro-batches") {

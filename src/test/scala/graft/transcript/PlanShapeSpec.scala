@@ -45,7 +45,7 @@ class PlanShapeSpec extends SparkSuite {
   }
 
   private lazy val validator =
-    new TranscriptValidator(TranscriptSuiteConfig(persistSeq = false))
+    new TranscriptValidator()
 
   test("all keyed violation kinds (dup/gap/ts) share one 2-exchange plan") {
     val keyV = validator.keySequenceViolations(validator.seqTable(data))

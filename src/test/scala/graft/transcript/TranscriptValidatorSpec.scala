@@ -181,7 +181,7 @@ class TranscriptValidatorSpec extends SparkSuite {
       Row("d1", 1, "tool", "y", "search", ts(60)),
       Row("d1", 2, "user", "z", null, ts(120)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    val v = new TranscriptValidator(TranscriptSuiteConfig(persistSeq = false))
+    val v = new TranscriptValidator()
     val hc = v.healthCheck(df, Nil).collect()(0)
     val rv = v.rowViolations(df).groupBy("constraint_id").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -259,7 +259,7 @@ class TranscriptValidatorSpec extends SparkSuite {
       ("c1", 1, "assistant", null: String, null: String, now),
       ("c1", 2, "user", "bye", "bash", now)
     ).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val v = new TranscriptValidator(TranscriptSuiteConfig(persistSeq = false))
+    val v = new TranscriptValidator()
     val verdicts = v.convVerdicts(v.seqTable(data))
     assert(verdicts.filter(col("pass")).count() == 1, "c1 is sequence-clean")
     // conversation-grain exclusion: dropping only the bad rows would leave
@@ -273,13 +273,14 @@ class TranscriptValidatorSpec extends SparkSuite {
     val cfg = TranscriptGen.GenConfig(numConvs = 300, seed = 23,
       dupRate = 0.01, gapRate = 0.01, nullTextRate = 0.01, badRoleRate = 0.01)
     val data = TranscriptGen.transcripts(spark, cfg).cache()
-    val v = new TranscriptValidator(TranscriptSuiteConfig(persistSeq = false))
+    val v = new TranscriptValidator()
     val verdicts = v.convVerdicts(v.seqTable(data))
     val clean = v.cleanRows(data, verdicts).cache()
     assert(clean.count() > 0, "some conversations must survive")
     val report2 = v.validate(clean)
     assert(report2.violations.count() === 0L,
       "the cleaned table must pass its own suite")
+    report2.cleanup()
     data.unpersist(); clean.unpersist()
   }
 
@@ -289,7 +290,7 @@ class TranscriptValidatorSpec extends SparkSuite {
     val now = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val data = Seq(("c1", 0, null: String, "txt", "bash", now))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val v = new TranscriptValidator(TranscriptSuiteConfig(persistSeq = false))
+    val v = new TranscriptValidator()
     val ids = v.rowViolations(data).select("constraint_id")
       .collect().map(_.getString(0)).toSet
     assert(ids.contains(Constraints.NullRole))

@@ -46,7 +46,7 @@ class ParquetRowIdSpec extends SparkSuite {
       """{"models": {"M": {"index": "id", "edges": {
         |  "id": {"type": "Number"}, "value": {"type": "Number"}},
         |  "assertions": [{"msg": "value <= 40", "expr": [{"col": "value"}, {"le": 40}]}]}}}""".stripMargin)
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", Validator.withParquetRowIds(spark, dir))
     assert(result.violations.filter("err = 'AssertionFailed'").count() === 200 / 50 * 9)
     assert(result.survivors.get.count() === 164)

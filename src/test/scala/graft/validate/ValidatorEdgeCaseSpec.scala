@@ -24,7 +24,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         StructField("id", DoubleType), StructField("v", StringType),
         StructField("_row", LongType, nullable = false))),
       Seq(Row(1.0, "a", 0L), Row(null, "x", 1L), Row(null, "y", 2L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val missing = result.violations
       .filter("err = 'MissingValue' AND col = 'id'")
@@ -47,7 +47,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         StructField("id", DoubleType), StructField("v", StringType),
         StructField("_row", LongType, nullable = false))),
       Seq(Row(1.0, "a", 0L), Row(null, "x", 1L), Row(null, "y", 2L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val errs = result.violations.collect()
       .map(r => (r.getAs[String]("err"), r.getAs[String]("col"), r.getAs[Long]("row")))
@@ -68,7 +68,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         StructField("id", LongType), StructField("score", DoubleType),
         StructField("_row", LongType, nullable = false))),
       Seq(Row(1L, 50.0, 0L), Row(2L, Double.NaN, 1L), Row(3L, 200.0, 2L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val rows = result.violations.filter("err = 'AssertionFailed'")
       .collect().map(_.getAs[Long]("row")).toSet
@@ -99,7 +99,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         Row(4L, Seq(), 3L),                    // empty -> vacuous
         Row(5L, null, 4L),                     // null array -> vacuous
         Row(6L, Seq("x", "y"), 5L)))           // two failing elements -> ONE row
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val fails = result.violations.filter("err = 'AssertionFailed'")
       .collect().map(_.getAs[Long]("row")).toSeq.sorted
@@ -125,7 +125,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
       // label, so the reference reports nothing; Spark would group NaN
       // AND match it in the join-back without the nanSafe mapping
       Seq(Row(1L, Double.NaN, 0L), Row(2L, Double.NaN, 1L), Row(3L, 5.0, 2L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val subIdx = result.violations.filter("err = 'NonUniqueSubIndex'").count()
     assert(subIdx == 0, "NaN sub-keys must not be flagged")
@@ -148,7 +148,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
       // entity A: k1=1, k2=2.0; entity B: k1=2, k2=3.0 — A's k2 value 2.0
       // equals B's k1 value 2 numerically but not physically
       Seq(Row(1L, 2.0, 0L), Row(2L, 3.0, 1L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val conflicted = result.violations
       .filter("err = 'IndexConflict'")
@@ -172,7 +172,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         StructField("k1", LongType), StructField("k2", LongType),
         StructField("_row", LongType, nullable = false))),
       (0L until 200L).map(i => Row(i, i + 1, i)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val vio = result.violations.filter("err = 'IndexConflict'")
     vio.collect() // final AQE shape appears only in the post-run executedPlan
@@ -229,7 +229,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         StructField("k1", LongType), StructField("k2", LongType),
         StructField("_row", LongType, nullable = false))),
       Seq(Row(5L, 5L, 0L), Row(6L, 7L, 1L)))
-    val cleanResult = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val cleanResult = new Validator(schema)
       .validate("M", clean)
     assert(cleanResult.violations.count() === 0,
       "self-coincident alternate keys of ONE entity must not conflict")
@@ -246,7 +246,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         StructField("id", LongType), StructField("sk", LongType),
         StructField("_row", LongType, nullable = false))),
       Seq(Row(null, 1L, 0L), Row(2L, 1L, 1L)))
-    val r2 = new Validator(schema2, ValidatorConfig(abortOnEmpty = false))
+    val r2 = new Validator(schema2)
       .validate("M", nullField)
     val subIdx = r2.violations.filter("err = 'NonUniqueSubIndex' AND col = 'sk'")
       .collect().map(_.getAs[Long]("row")).toSet
@@ -263,7 +263,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
       StructType(Seq(
         StructField("id", DoubleType), StructField("_row", LongType, nullable = false))),
       Seq(Row(1.0, 0L), Row(2.0, 1L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val vios = result.violations.filter("err = 'AssertionFailed'").collect()
     assert(vios.length === 2, "every row fails the constant-false assertion")
@@ -285,7 +285,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
       Seq(
         Row(1.0, 1.5, 0L), Row(1.0, Double.NaN, 1L), // {1.5, NaN} -> one value
         Row(2.0, Double.NaN, 2L)))                   // all-NaN -> missing
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val byErr = result.violations.collect()
       .groupBy(_.getAs[String]("err")).view.mapValues(_.length).toMap
@@ -306,7 +306,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
     val emptySchema = StructType(Seq(
       StructField("id", DoubleType), StructField("v", StringType),
       StructField("_row", LongType, nullable = false)))
-    val parity = ValidatorConfig(strictReferenceParity = true, abortOnEmpty = true)
+    val parity = ValidatorConfig(strictReferenceParity = true)
     // clean zero-row table: the reference only aborts on emptiness AFTER a
     // drop, so this loads as an EMPTY model (survivors defined, 0 rows)
     val clean = new Validator(schema, parity).validate("M", df(emptySchema, Nil))
@@ -325,6 +325,34 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
       "the abort precedes the missing-index stage (loader.py:63-65)")
   }
 
+  test("S4 dropping every row: the scale path returns empty survivors, parity aborts") {
+    val schema = CompiledSchema.load(
+      """{"models": {"M": {"index": "id", "edges": {
+        |  "id": {"type": "Number"}, "v": {"type": "Number"}},
+        |  "assertions": [{"msg": "v <= 10", "expr": [{"col": "v"}, {"le": 10}]}]}}}""".stripMargin)
+    // every row fails the assertion; id 2 would also be MultipleValues in
+    // S6 had it survived S4
+    val data = df(
+      StructType(Seq(
+        StructField("id", LongType), StructField("v", LongType),
+        StructField("_row", LongType, nullable = false))),
+      Seq(Row(1L, 20L, 0L), Row(2L, 30L, 1L), Row(2L, 40L, 2L)))
+    def vios(r: ValidationResult) = r.violations.collect()
+      .map(v => (v.getAs[String]("err"), v.getAs[Long]("row"), v.getAs[String]("col")))
+      .toSeq.sorted
+    val expected = Seq(0L, 1L, 2L).map(("AssertionFailed", _, "v"))
+    val scale = new Validator(schema).validate("M", data)
+    assert(scale.survivors.isDefined, "the scale path never aborts on an empty stage")
+    assert(scale.survivors.get.count() === 0)
+    assert(vios(scale) === expected)
+    scale.cleanup()
+    val parity = new Validator(schema, ValidatorConfig(strictReferenceParity = true))
+      .validate("M", data)
+    assert(parity.survivors.isEmpty, "parity aborts after the S4 mask empties the table")
+    assert(vios(parity) === expected)
+    parity.cleanup()
+  }
+
   test("S6: hot-key many-edge value set is bounded at cap (+ truncation report)") {
     import org.apache.spark.sql.functions._
     val schema = CompiledSchema.load(
@@ -340,7 +368,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
     val small = spark.range(0, 3)
       .select(lit(2L).as("id"), (col("id") + 7).as("v"), (col("id") + 200000).as("_row"))
     val result = new Validator(schema,
-      ValidatorConfig(abortOnEmpty = false, maxGroupValues = cap))
+      ValidatorConfig(maxGroupValues = cap))
       .validate("M", hot.union(small))
     val survivors = result.survivors.get.orderBy("id").collect()
     assert(survivors.length === 2)
@@ -367,7 +395,7 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
         Row(1L, Seq("b", "a", null), 0L),
         Row(1L, Seq("a", "c"), 1L),
         Row(2L, null, 2L)))
-    val result = new Validator(schema, ValidatorConfig(abortOnEmpty = false))
+    val result = new Validator(schema)
       .validate("M", data)
     val survivors = result.survivors.get.orderBy("id").collect()
     assert(survivors.length === 1, "the empty-set group is dropped (MissingValue)")
