@@ -240,6 +240,9 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the same engine tuning the CLI and the query entry points apply, so
+    // the scaling evidence measures the engine as it runs
+    graft.Tuning(s)
     s
   }
 }

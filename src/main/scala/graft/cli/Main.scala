@@ -25,14 +25,12 @@ import java.nio.file.{Files, Paths}
 object Main {
 
   def main(args: Array[String]): Unit = {
-    if (args.isEmpty) { usage(); sys.exit(2) }
-    val mode = args.head
     // validate BEFORE paying SparkSession startup: an unknown mode or a
     // malformed option must not spin up a local cluster just to print usage
-    if (mode != "kye" && mode != "transcripts" && mode != "ann") {
-      System.err.println(s"unknown mode $mode"); usage(); sys.exit(2)
+    val (mode, opts) = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(error) => System.err.println(error); usage(); sys.exit(2)
     }
-    val opts = parseOpts(args.tail)
     // value-shape validation also belongs BEFORE Spark startup (and before
     // the full-table row-key scan): a typo'd numeric option must cost a
     // usage line, not a cluster spin-up plus a 10^12-row pass
@@ -85,7 +83,7 @@ object Main {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.Tuning(spark) // engine-wide session tuning (env-overridable)
+    graft.Tuning(spark) // engine-wide session tuning (a host-set value wins)
     val hadViolations =
       try {
         if (mode == "kye") runKye(spark, opts, maxGroupValues)
@@ -427,6 +425,14 @@ object Main {
       spark.read.json(path)
     else spark.read.parquet(path)
 
+  /** The options of each mode: exactly those [[usage]] lists. */
+  private val modeOptions: Map[String, Set[String]] = Map(
+    "kye" -> Set("schema", "data", "model", "violations", "parity", "row-key", "compile",
+      "max-group-values", "skip-row-key-check"),
+    "transcripts" -> Set("table", "conv-keys", "checkpoint", "violations", "baseline",
+      "write-baseline", "content-digest", "max-concurrent", "partition-timeout-ms"),
+    "ann" -> Set("table", "centroids", "id", "vec", "n-lists", "k", "n-probe", "queries", "out"))
+
   /** Options that are bare flags; every other option REQUIRES a value. */
   private val boolFlags = Set("parity", "skip-row-key-check", "content-digest")
 
@@ -441,26 +447,30 @@ object Main {
       }
     }
 
-  private def parseOpts(args: Array[String]): Map[String, String] = {
-    val m = scala.collection.mutable.Map[String, String]()
-    var i = 0
-    while (i < args.length) {
-      val a = args(i)
-      if (a.startsWith("--")) {
-        val key = a.stripPrefix("--")
-        if (boolFlags(key)) { m(key) = "true"; i += 1 }
-        else if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
-          m(key) = args(i + 1); i += 2
-        } else {
-          // a silent "true" here produced misleading downstream failures
-          // (--data with a forgotten value -> "Path does not exist: .../true")
-          System.err.println(s"option --$key requires a value")
-          usage(); sys.exit(2)
-        }
-      } else i += 1
+  /** `mode --option [value] ...` as the mode and its options, or the usage
+    * error. Anything [[usage]] does not list for the mode, and an option
+    * given twice, is an error: a silently ignored typo (`--checkpiont
+    * m.json`) would run without a manifest, and a run that cannot be
+    * resumed. */
+  private[cli] def parseArgs(args: Seq[String]): Either[String, (String, Map[String, String])] =
+    args.toList match {
+      case Nil => Left("missing mode")
+      case mode :: rest => modeOptions.get(mode).toRight(s"unknown mode $mode").flatMap { allowed =>
+        def options(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] =
+          rest match {
+            case Nil => Right(acc)
+            case a :: _ if !a.startsWith("--") => Left(s"unexpected argument '$a'")
+            case a :: _ if !allowed(a.drop(2)) => Left(s"unknown option $a")
+            case a :: _ if acc.contains(a.drop(2)) => Left(s"option $a given twice")
+            case a :: tail if boolFlags(a.drop(2)) => options(tail, acc + (a.drop(2) -> "true"))
+            case a :: v :: tail if !v.startsWith("--") => options(tail, acc + (a.drop(2) -> v))
+            // a silent "true" here produced misleading downstream failures
+            // (--data with a forgotten value -> "Path does not exist: .../true")
+            case a :: _ => Left(s"option $a requires a value")
+          }
+        options(rest, Map.empty).map(mode -> _)
+      }
     }
-    m.toMap
-  }
 
   private def usage(): Unit = System.err.println(
     """usage:

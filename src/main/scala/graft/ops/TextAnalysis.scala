@@ -67,25 +67,6 @@ object TextAnalysis {
 
   // ---- quality scoring -----------------------------------------------------------
 
-  def punctRatio(text: Column): Column =
-    when(length(text) > 0,
-      coalesce(regexp_count(text, lit("[^\\s\\p{L}\\p{N}]")), lit(0)).cast("double") / length(text))
-      .otherwise(lit(0.0))
-
-  def upperRatio(text: Column): Column =
-    when(length(text) > 0,
-      coalesce(regexp_count(text, lit("\\p{Lu}")), lit(0)).cast("double") / length(text))
-      .otherwise(lit(0.0))
-
-  def meanWordLength(text: Column): Column = {
-    val toks = Dedup.tokens(text)
-    when(size(toks) > 0,
-      aggregate(toks, lit(0), (a, t) => a + length(t)).cast("double") / size(toks))
-      .otherwise(lit(0.0))
-  }
-
-  def stopwordRatio(text: Column): Column = langScore(text, "en")
-
   /** Composite [0,1] quality score: length in a sane band, moderate
     * punctuation, non-trivial stopword share, word lengths in natural
     * range. The standard C4/Gopher-style heuristic family. Native

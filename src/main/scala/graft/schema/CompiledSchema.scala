@@ -78,7 +78,6 @@ final case class Model(
 
   /** Lookup by name or by source-column title (`compiled.py:268-276`). */
   def edge(key: String): Edge = edgeTitles.getOrElse(key, edges(key))
-  def hasEdge(key: String): Boolean = edgeTitles.contains(key) || edges.contains(key)
 }
 
 final case class CompiledSchema(types: Map[String, TypeSpec], models: Map[String, Model]) {

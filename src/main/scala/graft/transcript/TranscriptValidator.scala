@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.validate.Violations
 
 /** Constraint ids emitted by the transcript suite. */
 object Constraints {
@@ -44,8 +45,10 @@ final case class TranscriptReport(
   *
   *  1. '''Row predicates''' — every per-row constraint compiles to a
   *     Catalyst predicate inside ONE whole-stage-codegen'd scan; violations
-  *     materialize via `filter(array(structs), !pass)` + `explode`, so the
-  *     non-violating fast path allocates nothing and nothing shuffles.
+  *     materialize through [[graft.validate.Violations.failing]] (the
+  *     failing-check mechanism the kye [[graft.validate.Validator]] shares),
+  *     so the non-violating fast path allocates nothing and nothing
+  *     shuffles.
   *  2. '''Key aggregation''' — one shuffle on (conv_id, turn_idx) computes
   *     duplicate-key counts AND reduces the data to distinct turns. The key
   *     is maximally fine-grained, so partial aggregation absorbs dup skew
@@ -54,7 +57,7 @@ final case class TranscriptReport(
   *     (turn_idx)` over the REDUCED per-turn table (bounded by max
   *     conversation length, not raw row count) yields previous-turn and
   *     previous-ts columns; dup/gap/ts-monotone verdicts then fold into one
-  *     explode-filter pass (same trick as step 1) — so all keyed violation
+  *     failing-check pass (same mechanism as step 1) — so all keyed violation
   *     kinds share the SAME two exchanges instead of re-aggregating per
   *     kind.
   *  4. '''Conversation rollup''' — groupBy(conv_id) over the window output
@@ -85,46 +88,32 @@ class TranscriptValidator {
     else df.withColumn("partition_id",
       pmod(xxhash64(coalesce(col("conv_id"), lit(""))), lit(DerivedPartitions)).cast("int"))
 
-  /** Violation struct: built only for failing checks via filter+explode. */
-  private def vioStruct(id: String, pass: Column, column: String,
-                        observed: Column, expected: Column): Column =
-    struct(lit(id).as("cid"), pass.as("pass"), lit(column).as("column"),
+  /** The violation fields of one failing check. */
+  private def payload(id: String, column: String, observed: Column, expected: Column): Column =
+    struct(lit(id).as("constraint_id"), lit(column).as("column"),
       observed.cast("string").as("observed"), expected.cast("string").as("expected"))
 
-  /** Materialize violation rows for failing checks only. The hot path is a
-    * pure-predicate `anyFail` filter (codegen, zero allocation on passing
-    * rows — at 1e-3 error rates that's 99.9% of the input); the struct
-    * array + explode run only on the surviving sliver. */
-  private def explodeFails(df: DataFrame, structs: Seq[Column], fails: Seq[Column],
-                           extraCols: Seq[String] = Nil): DataFrame =
-    df.where(fails.reduce(_ || _))
-      .select(
-        (Seq(col("conv_id"), col("turn_idx"), col("partition_id"),
-          filter(array(structs: _*), s => !s.getField("pass")).as("_fails")) ++
-          extraCols.map(col)): _*)
-      .select(
-        (Seq(col("conv_id"), col("turn_idx"), col("partition_id"),
-          explode(col("_fails")).as("_f")) ++ extraCols.map(col)): _*)
-      .select(
-        (Seq(col("_f.cid").as("constraint_id"), col("conv_id"), col("turn_idx"),
-          col("_f.column").as("column"), col("_f.observed").as("observed"),
-          col("_f.expected").as("expected"), col("partition_id")) ++
-          extraCols.map(col)): _*)
+  /** The failing checks of `df` as violation rows ([[Violations.failing]]),
+    * in `vioCols` order followed by `extraCols`. */
+  private def failingRows(df: DataFrame, checks: Seq[Violations.Check],
+                          extraCols: Seq[String] = Nil): DataFrame =
+    Violations.failing(df, Seq("conv_id", "turn_idx", "partition_id") ++ extraCols, checks)
+      .select((vioCols ++ extraCols).map(col): _*)
 
   /** One row-level constraint: id, null-free pass predicate, violation
-    * struct. */
-  private final case class RowCheck(id: String, pass: Column, vio: Column)
+    * payload. */
+  private final case class RowCheck(id: String, pass: Column, payload: Column)
 
   /** The row constraints — the SINGLE source of truth shared by
     * [[rowViolations]], [[rowPass]] AND [[healthCheck]] (a re-implemented
     * predicate list drifted once: healthCheck's ToolRole lacked the null
     * coalesce and undercounted vs rowViolations on null-role rows). Pass
-    * predicates must be null-free: a NULL verdict would be silently
-    * dropped by explodeFails' filter AND pass a survivors filter. */
+    * predicates must be null-free: a NULL verdict would report no
+    * violation AND pass a survivors filter. */
   private def rowChecks: Seq[RowCheck] = {
     def chk(id: String, pass: Column, column: String,
             observed: Column, expected: Column) =
-      RowCheck(id, pass, vioStruct(id, pass, column, observed, expected))
+      RowCheck(id, pass, payload(id, column, observed, expected))
     Seq(
       chk(NullConvId, col("conv_id").isNotNull, "conv_id",
         lit(null).cast("string"), lit("non-null")),
@@ -141,7 +130,7 @@ class TranscriptValidator {
       chk(NullTs, col("ts").isNotNull, "ts",
         lit(null).cast("string"), lit("non-null")),
       // coalesce: role=NULL with tool set must FAIL, not evaluate to a
-      // NULL verdict that explodeFails would silently drop
+      // NULL verdict that would report no violation
       chk(ToolRole, coalesce(col("tool").isNull || col("role") === "tool", lit(false)),
         "tool", col("tool"), lit("tool set only when role = 'tool'")))
   }
@@ -149,11 +138,8 @@ class TranscriptValidator {
   /** Step 1: all row-level constraints in one codegen'd pass, no shuffle.
     * `extraCols` are carried through to the violation rows (e.g. the event
     * time for streaming windows). */
-  def rowViolations(df0: DataFrame, extraCols: Seq[String] = Nil): DataFrame = {
-    val df = withPartId(df0)
-    val checks = rowChecks
-    explodeFails(df, checks.map(_.vio), checks.map(c => !c.pass), extraCols)
-  }
+  def rowViolations(df0: DataFrame, extraCols: Seq[String] = Nil): DataFrame =
+    failingRows(withPartId(df0), rowChecks.map(c => Violations.Check(!c.pass, c.payload)), extraCols)
 
   /** Conjunction of every row-level pass predicate (null-free). */
   def rowPass: Column = rowChecks.map(_.pass).reduce(_ && _)
@@ -225,16 +211,14 @@ class TranscriptValidator {
       col("_min_ts") < col("_prev_max_ts")
 
   /** Dup/gap/ts-monotone violations in ONE plan over the sequence table. */
-  def keySequenceViolations(seq: DataFrame): DataFrame = {
-    val structs = Seq(
-      vioStruct(DupKey, !(col("_n") > 1), "conv_id,turn_idx",
-        concat(lit("count="), col("_n")), lit("unique (conv_id, turn_idx)")),
-      vioStruct(SeqGap, !gapPred, "turn_idx",
-        col("turn_idx"), coalesce(col("_prev_turn") + 1, lit(0))),
-      vioStruct(TsMonotone, !tsRegressPred, "ts",
-        col("_min_ts"), concat(lit(">= "), col("_prev_max_ts").cast("string"))))
-    explodeFails(seq, structs, Seq(col("_n") > 1, gapPred, tsRegressPred))
-  }
+  def keySequenceViolations(seq: DataFrame): DataFrame =
+    failingRows(seq, Seq(
+      Violations.Check(col("_n") > 1, payload(DupKey, "conv_id,turn_idx",
+        concat(lit("count="), col("_n")), lit("unique (conv_id, turn_idx)"))),
+      Violations.Check(gapPred, payload(SeqGap, "turn_idx",
+        col("turn_idx"), coalesce(col("_prev_turn") + 1, lit(0)))),
+      Violations.Check(tsRegressPred, payload(TsMonotone, "ts",
+        col("_min_ts"), concat(lit(">= "), col("_prev_max_ts").cast("string"))))))
 
   /** Step 4: per-conversation verdicts (reuses the window's conv_id hash
     * partitioning — no extra exchange). */

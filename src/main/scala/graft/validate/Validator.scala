@@ -63,10 +63,12 @@ final case class ValidationResult(
   *    with ONE aggregate job batching every column's try-cast null-delta
   *  - S4 assertions: Catalyst-compiled predicate columns, null = vacuous
   *    pass (`coalesce(p, true)` — deliberate deviation from the reference's
-  *    silent null-row drop, SURVEY §2.4-W2)
+  *    silent null-row drop, SURVEY §2.4-W2); every assertion reports
+  *    through ONE violation leg ([[Violations.failing]])
   *  - S5 sub-index functional dependency: groupBy(subKey) countDistinct(fullKey)
   *  - S6 cardinality + group-by-key: ONE shuffle computes every column's
-  *    per-group distinct count, the grouped value, and the member row ids
+  *    per-group distinct count and the grouped value; one violation leg
+  *    per error kind joins the failing keys back to their member row ids
   *  - S7 index-conflict: union of key projections, countDistinct(entity)>1
   *  - S8 survivors returned
   *
@@ -173,8 +175,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
       // array column this way (every COL in the program IS the edge); the
       // reference itself runs ONLY single-edge assertions
       // (loader.py:120-121).
-      final case class Compiled(pred: Column)
-      def compileAssertion(a: graft.schema.Assertion): Compiled =
+      def compileAssertion(a: graft.schema.Assertion): Column =
         a.edges match {
           case Seq(edge) if df.schema(edge).dataType.isInstanceOf[ArrayType] =>
             val elemType = df.schema(edge).dataType.asInstanceOf[ArrayType].elementType
@@ -202,9 +203,8 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
             // (vacuous) for alignment-free programs, the poisoned constant
             // when a stacked op re-instates the row.
             val absentVerdict = perElem(lit(null).cast(elemType))
-            Compiled(
-              when(arr.isNotNull && coalesce(anyEval, lit(false)), size(fails) === 0)
-                .otherwise(absentVerdict))
+            when(arr.isNotNull && coalesce(anyEval, lit(false)), size(fails) === 0)
+              .otherwise(absentVerdict)
           case edges =>
             edges.find(e => df.schema(e).dataType.isInstanceOf[ArrayType]).foreach { e =>
               throw new UnsupportedOperationException(
@@ -220,34 +220,30 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
             // reference crashes in result[~result] (label indexing on an
             // int series) and the row-wise completion here is the
             // documented crash-class deviation
-            Compiled(ExprCompiler.asVerdict(c, t))
+            ExprCompiler.asVerdict(c, t)
         }
-      val compiled = applicable.map(a => a -> compileAssertion(a))
-      val rawPreds = compiled.map { case (a, c) => a -> c.pred }
-      // null verdict = vacuous pass for violation reporting (see class doc)
-      for ((a, c) <- compiled) {
-        // a zero-edge (constant) assertion still yields one violation row
-        // per failing row — explode over the empty edge list would silently
-        // swallow it. Array-edge assertions ALSO report one row per failing
-        // ROW: the reference VM dedups (row, value) pairs on every stack
-        // pop (vm.py:26-30), so a row whose distinct elements all fail
-        // collapses to ONE False entry in result[~result] [verified by
-        // execution: vals=[-5,-5,-7] yields a single AssertionFailed row].
-        // A row with MIXED element verdicts crashes the reference outright
-        // ("cannot reindex on an axis with duplicate labels" in
-        // `mask &= result`, loader.py:124) — documented deviation: here it
-        // fails the row cleanly instead of crashing.
-        val base = df.filter(!coalesce(c.pred, lit(true)))
-        val colOut =
-          if (a.edges.isEmpty) lit(null).cast(StringType).as("col")
-          else explode(array(a.edges.map(lit(_)): _*)).as("col")
-        violations += base.select(
-          lit("AssertionFailed").as("err"), lit(model.name).as("model"),
-          col(rowId).cast(LongType).as("row"),
-          colOut,
-          lit(a.loc.orNull).cast(StringType).as("loc"),
-          lit(a.msg).as("expected"))
-      }
+      val rawPreds = applicable.map(a => a -> compileAssertion(a))
+      // ONE violation leg for every assertion: a failing row reports once
+      // per (assertion, edge), and a zero-edge (constant) assertion once
+      // with a null col. Null verdict = vacuous pass (see class doc).
+      // Array-edge assertions ALSO report one row per failing ROW: the
+      // reference VM dedups (row, value) pairs on every stack pop
+      // (vm.py:26-30), so a row whose distinct elements all fail collapses
+      // to ONE False entry in result[~result] [verified by execution:
+      // vals=[-5,-5,-7] yields a single AssertionFailed row]. A row with
+      // MIXED element verdicts crashes the reference outright ("cannot
+      // reindex on an axis with duplicate labels" in `mask &= result`,
+      // loader.py:124) — documented deviation: here it fails the row
+      // cleanly instead of crashing.
+      val assertChecks = for {
+        (a, p) <- rawPreds
+        edge <- if (a.edges.isEmpty) Seq(null) else a.edges
+      } yield Violations.Check(!coalesce(p, lit(true)),
+        struct(lit(edge).cast(StringType).as("col"),
+          lit(a.loc.orNull).cast(StringType).as("loc"), lit(a.msg).as("expected")))
+      violations += Violations.failing(df, Seq(rowId), assertChecks).select(
+        lit("AssertionFailed").as("err"), lit(model.name).as("model"),
+        col(rowId).cast(LongType).as("row"), col("col"), col("loc"), col("expected"))
       var parityAssertionFired = false
       val survivorPreds: Seq[Column] =
         if (config.strictReferenceParity) {
@@ -423,40 +419,42 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
     val grouped = cached(grouped0.select(groupedCols: _*))
 
     var groupOk: Column = lit(true)
-    // per-(column, verdict) legs each filter `grouped` with a LITERAL err
-    // column — deliberately NOT fused into one explode pass: the literal
-    // lets consumers filtering on err (every driver query does) constant-
-    // fold a leg's predicate and PRUNE the whole leg at optimize time; a
-    // fused struct-array explode makes err data-dependent and forces all
-    // S6 machinery into every such plan (measured: q_kye_subindex 10 -> 26
-    // AQE jobs). The 2N cached-relation re-scans the legs cost are
-    // cheap next to losing that pruning.
-    val badKeyParts = ListBuffer.empty[DataFrame]
+    val keyChecks = ListBuffer.empty[(String, Violations.Check)]
     for (c <- dataCols) {
       val e = model.edge(c)
       val n = col(s"_n_$c")
-      def badKeys(cond: Column, err: String): DataFrame =
-        grouped.filter(cond).select(
-          col("_key"), lit(err).as("err"), lit(c).as("col"),
-          lit(e.loc.orNull).cast(StringType).as("loc"))
-      if (!e.many) {
-        // exact despite the value cap: n is capped at cap+1 >= 2, so the
-        // 0 / 1 / >1 trichotomy is never distorted
-        badKeyParts += badKeys(n > 1, "MultipleValues")
-        groupOk = groupOk && !(n > 1)
-      } else {
+      def check(err: String, fails: Column): Unit =
+        keyChecks += err -> Violations.Check(fails,
+          struct(lit(c).as("col"), lit(e.loc.orNull).cast(StringType).as("loc")))
+      if (e.many) {
         // overflow report (not a drop): the survivor keeps its truncated
         // sorted array; members are flagged so downstream consumers know
         // the value set is a prefix
-        badKeyParts += badKeys(n > cap, "TruncatedValues")
+        check("TruncatedValues", n > cap)
+      } else if (keyComponent(c).isEmpty) {
+        // exact despite the value cap: n is capped at cap+1 >= 2, so the
+        // 0 / 1 / >1 trichotomy is never distorted. (A scalar index
+        // component's n is 0 or 1 by construction: no check.)
+        check("MultipleValues", n > 1)
+        groupOk = groupOk && !(n > 1)
       }
       if (!e.none) {
-        badKeyParts += badKeys(n === 0, "MissingValue")
+        check("MissingValue", n === 0)
         groupOk = groupOk && !(n === 0)
       }
     }
-    if (badKeyParts.nonEmpty) {
-      val bad = badKeyParts.reduce(_ union _)
+    // ONE leg per err kind, each a single scan of `grouped` for all its
+    // columns' checks. The leg's err stays a LITERAL: a consumer filtering
+    // on err (e.g. `q_kye_subindex`) constant-folds every other kind's leg
+    // to false and PRUNES it at optimize time. Fusing the kinds into one
+    // leg would make err data-dependent and force all S6 machinery into
+    // every such plan (measured: q_kye_subindex 10 -> 26 AQE jobs).
+    val badKeyLegs = keyChecks.map(_._1).distinct.map { err =>
+      Violations.failing(grouped, Seq("_key"), keyChecks.collect { case (`err`, ch) => ch }.toSeq)
+        .select(col("_key"), lit(err).as("err"), col("col"), col("loc"))
+    }
+    if (badKeyLegs.nonEmpty) {
+      val bad = badKeyLegs.reduce(_ union _)
       // null-safe join: a single-column index key is the raw column, and a
       // group keyed by a NULL index value would never equi-join back to its
       // member rows (null != null) — its MissingValue violations would be
