@@ -24,19 +24,17 @@ object SparkEntry {
 
   // ---------- shared inputs ---------------------------------------------------
 
-  /** Per-session memo of resolved parquet relations. `spark.read.parquet`
-    * re-runs source resolution (file listing + footer schema read) on
-    * every call — ~0.1-0.3 s of driver time per query in a 29-query
-    * session over the same three tables. The memo caches the resolved
-    * DataFrame (metadata only — no rows are persisted; every action still
-    * scans the files), exactly what a table catalog gives you at scale.
-    * Keyed by (session, path) so concurrent sessions and different SF
-    * dirs never share relations. */
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def readParquet(spark: SparkSession, path: String): DataFrame =
-    readMemo.computeIfAbsent((spark, path), { case (s, p) => s.read.parquet(p) })
+  /** Parquet relations resolved once per session, as temp views in the
+    * session's own catalog (metadata only: every action still scans the
+    * files). `spark.read.parquet` re-resolves (file listing + footer read)
+    * on every call: 15 of the 29 queries plan ~0.06 s slower without this
+    * (graft.BenchExtra build_s, sf0.1, local[4]). The data dirs must not be
+    * rewritten while a session reads them: the view keeps the first listing. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val view = s"graft_parquet_${graft.io.Digests.sha8(path)}"
+    if (!spark.catalog.tableExists(view)) spark.read.parquet(path).createOrReplaceTempView(view)
+    spark.table(view)
+  }
 
   private def events(spark: SparkSession, dir: String): DataFrame =
     readParquet(spark, s"$dir/events.parquet")

@@ -10,69 +10,35 @@ import java.nio.file.{Files, Paths}
 
 /** CLI mirroring the reference's entry points (kyepy kye/cli.py):
   *
-  * Kye-model validation (E2 — precompiled artifact path):
-  *   graft.cli.Main kye --schema s.kye.json --data t.parquet --model M
+  * Kye-model validation (E1 `.kye` source or E2 precompiled artifact):
+  *   graft.cli.Main kye --schema s.kye[.json|.yaml] --data t.parquet --model M
   *     [--violations outDir] [--parity]
+  *   requires --schema, and --model or --compile; --model requires --data.
   *
   * Transcript suite (north rule):
-  *   graft.cli.Main transcripts --table dir --conv-keys path
+  *   graft.cli.Main transcripts --table dir [--conv-keys path]
   *     [--checkpoint manifest.json] [--violations outDir]
   *     [--baseline hist.json] [--write-baseline hist.json]
+  *   requires --table; --max-concurrent above 1 and --partition-timeout-ms
+  *   require --checkpoint.
   *
-  * Exit code 65 when violations were found (like the reference CLI,
-  * kye/cli.py:80-83).
+  * IVF nearest-neighbour search:
+  *   graft.cli.Main ann --table items.parquet --centroids artifact.json
+  *   requires --table and --centroids.
+  *
+  * Exit code 2 with the usage text for any command-line error, decided by
+  * [[parseArgs]] before Spark starts; 65 when violations (or drift) were
+  * found, like the reference CLI (kye/cli.py:80-83).
   */
 object Main {
 
   def main(args: Array[String]): Unit = {
-    // validate BEFORE paying SparkSession startup: an unknown mode or a
-    // malformed option must not spin up a local cluster just to print usage
+    // every command-line question is settled BEFORE paying SparkSession
+    // startup: a malformed or incomplete command line must cost a usage
+    // line, not a cluster spin-up
     val (mode, opts) = parseArgs(args.toSeq) match {
       case Right(parsed) => parsed
       case Left(error) => System.err.println(error); usage(); sys.exit(2)
-    }
-    // value-shape validation also belongs BEFORE Spark startup (and before
-    // the full-table row-key scan): a typo'd numeric option must cost a
-    // usage line, not a cluster spin-up plus a 10^12-row pass
-    val maxGroupValues = parsePositiveInt(opts, "max-group-values")
-    val maxConcurrent = parsePositiveInt(opts, "max-concurrent").getOrElse(1)
-    // per-partition wall-clock budget for the checkpointed path (0 = no
-    // watcher); generous default in ResumableRunner
-    val partitionTimeoutMs: Long = opts.get("partition-timeout-ms").map { v =>
-      val n = try v.toLong catch {
-        case _: NumberFormatException =>
-          System.err.println(s"--partition-timeout-ms must be a non-negative integer, got '$v'")
-          usage(); sys.exit(2)
-      }
-      if (n < 0) {
-        System.err.println(s"--partition-timeout-ms must be >= 0, got $n")
-        usage(); sys.exit(2)
-      }
-      n
-    }.getOrElse(graft.transcript.ResumableRunner.DefaultPartitionTimeoutMs)
-    // a silently-ignored option is a lie to the operator: concurrency and
-    // the partition wall-clock watcher only exist on the checkpointed
-    // transcripts path
-    if (maxConcurrent > 1 && (mode != "transcripts" || !opts.contains("checkpoint"))) {
-      System.err.println("--max-concurrent requires transcripts mode with --checkpoint " +
-        "(partition-wise validation); it has no effect elsewhere")
-      usage(); sys.exit(2)
-    }
-    if (opts.contains("partition-timeout-ms") &&
-        (mode != "transcripts" || !opts.contains("checkpoint"))) {
-      System.err.println("--partition-timeout-ms requires transcripts mode with " +
-        "--checkpoint (partition-wise validation); it has no effect elsewhere")
-      usage(); sys.exit(2)
-    }
-    // ann-mode option shapes, validated BEFORE Spark startup like every
-    // other mode's (a typo'd --n-lists must cost a usage line, not a
-    // cluster spin-up; --n-lists 0 would reach a divide-by-zero in
-    // trainCentroids)
-    if (mode == "ann") {
-      for (req <- Seq("table", "centroids") if !opts.contains(req)) {
-        System.err.println(s"ann requires --$req"); usage(); sys.exit(2)
-      }
-      Seq("n-lists", "k", "n-probe").foreach(parsePositiveInt(opts, _))
     }
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
@@ -84,17 +50,14 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.Tuning(spark) // engine-wide session tuning (a host-set value wins)
+    // error exits stop the session too, not leaning on JVM exit cleanup;
+    // exit 65 when violations, compile errors or drift were found
     val hadViolations =
-      try {
-        if (mode == "kye") runKye(spark, opts, maxGroupValues)
-        else if (mode == "ann") runAnn(spark, opts)
-        else runTranscripts(spark, opts, maxConcurrent, partitionTimeoutMs)
-      } catch {
-        // error-exit paths must still stop the session (not lean on JVM
-        // exit cleanup); re-throw after stopping
-        case e: Throwable => spark.stop(); throw e
-      }
-    spark.stop()
+      try mode match {
+        case "kye" => runKye(spark, opts)
+        case "ann" => runAnn(spark, opts)
+        case _ => runTranscripts(spark, opts)
+      } finally spark.stop()
     if (hadViolations) sys.exit(65)
   }
 
@@ -106,14 +69,13 @@ object Main {
     * `ann centroids: trained|loaded` so operators (and the e2e spec) can
     * see which path ran. */
   private def runAnn(spark: SparkSession, opts: Map[String, String]): Boolean = {
-    // presence + shape already validated pre-startup in main()
     val table = opts("table")
     val artifact = opts("centroids")
     val idCol = opts.getOrElse("id", "vec_id")
     val vecCol = opts.getOrElse("vec", "embedding")
-    val nLists = parsePositiveInt(opts, "n-lists").getOrElse(32)
-    val k = parsePositiveInt(opts, "k").getOrElse(5)
-    val nProbe = parsePositiveInt(opts, "n-probe").getOrElse(4)
+    val nLists = opts.get("n-lists").fold(32)(_.toInt)
+    val k = opts.get("k").fold(5)(_.toInt)
+    val nProbe = opts.get("n-probe").fold(4)(_.toInt)
     val items = spark.read.parquet(table)
     val (cents, trained) = graft.ops.Similarity.trainOrLoadCentroids(
       items, idCol, vecCol, nLists, artifact)
@@ -140,8 +102,7 @@ object Main {
     false
   }
 
-  private def runKye(spark: SparkSession, opts: Map[String, String],
-                     maxGroupValues: Option[Int]): Boolean = {
+  private def runKye(spark: SparkSession, opts: Map[String, String]): Boolean = {
     val schemaPath = opts("schema")
     val text = Files.readString(Paths.get(schemaPath))
     // E1 path: `.kye` source compiles through the DSL front-end; E2 path:
@@ -159,8 +120,7 @@ object Main {
           case e: graft.parse.KyeParser.CompileException =>
             System.err.println(e.rendered)
             System.err.println(s"${e.errors.length} compile error(s)")
-            spark.stop() // exit path must not lean on JVM shutdown cleanup
-            sys.exit(65)
+            return true // exit 65, the same path as violations
         }
       else if (schemaPath.endsWith(".yaml") || schemaPath.endsWith(".yml"))
         CompiledSchema.fromYaml(text) // normalize precompiled input too
@@ -178,10 +138,7 @@ object Main {
       Files.writeString(Paths.get(out), artifact)
       println(s"wrote compiled artifact $out")
     }
-    if (!opts.contains("model")) {
-      require(opts.contains("compile"), "kye mode needs --model (or --compile for compile-only)")
-      return false
-    }
+    if (!opts.contains("model")) return false // compile-only (parseArgs required --compile)
     val model = opts("model")
     val dataPath = opts("data")
     // --row-key <col>: anchor violations on a natural key column (stays
@@ -231,7 +188,7 @@ object Main {
     val result = new Validator(schema,
       ValidatorConfig(
         strictReferenceParity = opts.contains("parity"),
-        maxGroupValues = maxGroupValues.getOrElse(ValidatorConfig().maxGroupValues)))
+        maxGroupValues = opts.get("max-group-values").fold(ValidatorConfig().maxGroupValues)(_.toInt)))
       .validate(model, withIds)
     val violations = result.violations.cache()
     opts.get("violations").foreach(out =>
@@ -279,9 +236,7 @@ object Main {
     totalViolations > 0
   }
 
-  private def runTranscripts(spark: SparkSession, opts: Map[String, String],
-                             maxConcurrent: Int,
-                             partitionTimeoutMs: Long): Boolean = {
+  private def runTranscripts(spark: SparkSession, opts: Map[String, String]): Boolean = {
     // --content-digest: snapshot ids additionally hash each file's edge
     // blocks, so a same-length same-mtime rewrite (object-store copy with
     // preserved timestamps) still invalidates the partition's checkpoint
@@ -304,6 +259,12 @@ object Main {
       "role" -> Drift.collect(StatsProfiler.categoricalHistogram(df, col("role"))),
       "text_len" -> Drift.collect(
         StatsProfiler.numericHistogram(df, length(col("text")), 0, 20, 20)))
+    // both drift legs' verdict lines; `scope` is "" (table) or "p=N ".
+    // formatLocal(Locale.ROOT): a comma-decimal default locale would print
+    // psi=0,1234 and break parsers of this line
+    def printVerdicts(scope: String, verdicts: Seq[Drift.DriftVerdict]): Unit =
+      verdicts.foreach(v => println("drift %s%s: psi=%.4f ks=%.4f drifted=%s".formatLocal(
+        java.util.Locale.ROOT, scope, v.name, v.psi, v.ks, v.drifted)))
 
     // per-partition histograms are additive: when the checkpointed run
     // validated EVERY partition, their sum IS the table histogram and the
@@ -322,30 +283,15 @@ object Main {
         // histograms PSI/KS-compare against the (table-level) baseline —
         // "the corpus drifted" becomes "partitions 3 and 7 drifted",
         // riding the same checkpointed loop. The table-level verdict
-        // below is unchanged.
-        // metric-set mismatches are invariant across partitions (baseline
-        // keys vs the fixed histogramsOf keys): warn ONCE, not once per
-        // partition — 5000 identical stderr lines bury real signal
-        val warnedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
+        // below is unchanged, and alone names the metrics only one side
+        // has: partitions produce its metric set (histogramsOf).
         val driftCheck = baselineSnap.map { base =>
           ResumableRunner.DriftCheck(
             baseline = base,
             histograms = histogramsOf,
             columns = Seq("role", "text"),
             onVerdicts = pd => {
-              pd.verdicts.foreach(v => println(
-                // formatLocal(Locale.ROOT): the f"" interpolator is
-                // locale-sensitive — a comma-decimal default locale would
-                // print psi=0,1234 and break parsers of this line
-                "drift p=%s %s: psi=%.4f ks=%.4f drifted=%s".formatLocal(
-                  java.util.Locale.ROOT, pd.partitionId, v.name, v.psi, v.ks, v.drifted)))
-              if ((pd.producedNotInBaseline.nonEmpty || pd.baselineNotProduced.nonEmpty)
-                  && warnedOnce.compareAndSet(false, true)) {
-                pd.producedNotInBaseline.foreach(n => System.err.println(
-                  s"warning: metric '$n' missing from the baseline — NOT drift-checked (any partition)"))
-                pd.baselineNotProduced.foreach(n => System.err.println(
-                  s"warning: baseline metric '$n' not produced by this build — skipped (any partition)"))
-              }
+              printVerdicts(s"p=${pd.partitionId} ", pd.verdicts)
               partHistSums.synchronized {
                 for ((k, h) <- pd.histograms)
                   partHistSums(k) = Drift.merge(partHistSums.getOrElse(k, Map.empty), h)
@@ -354,9 +300,12 @@ object Main {
         }
         // --max-concurrent N: validate N partitions simultaneously (Spark
         // accepts multi-threaded job submission; manifest commits stay
-        // atomic per partition); validated in main() before Spark startup
+        // atomic per partition). --partition-timeout-ms: per-partition
+        // wall-clock budget (0 = no watcher)
         val summary = new ResumableRunner(source, manifest, validator, convKeys, sink,
-          maxConcurrent, driftCheck, partitionTimeoutMs).run()
+          opts.get("max-concurrent").fold(1)(_.toInt), driftCheck,
+          opts.get("partition-timeout-ms").fold(ResumableRunner.DefaultPartitionTimeoutMs)(_.toLong))
+          .run()
         allPartitionsValidated = summary.skipped.isEmpty
         // skipped partitions were NOT drift-checked — say so, or the
         // absence of drift lines reads as "no partition drifted"
@@ -390,27 +339,20 @@ object Main {
         partHistSums.synchronized(partHistSums.toMap)
       else histogramsOf(source.read())
     opts.get("write-baseline").foreach { p =>
-      Files.writeString(Paths.get(p), Drift.snapshotToJson(cur))
+      Drift.writeSnapshot(Paths.get(p), cur)
       println(s"wrote baseline snapshot $p")
     }
     val drifted = baselineSnap.exists { base =>
       // a baseline from a different build may carry metrics this build
-      // doesn't produce (or miss ones it does): warn SYMMETRICALLY and
-      // skip, never crash after validation already completed — a silent
-      // intersect would let the operator believe every produced metric
-      // was drift-checked
-      (base.keySet diff cur.keySet).toSeq.sorted.foreach(k =>
+      // doesn't produce (or miss ones it does): warn and skip, never crash
+      // after validation already completed
+      val c = Drift.compare(base, cur)
+      c.baselineNotProduced.foreach(k =>
         System.err.println(s"warning: baseline metric '$k' not produced by this build — skipped"))
-      (cur.keySet diff base.keySet).toSeq.sorted.foreach(k =>
+      c.producedNotInBaseline.foreach(k =>
         System.err.println(s"warning: metric '$k' missing from the baseline — NOT drift-checked (refresh with --write-baseline)"))
-      val verdicts = (base.keySet intersect cur.keySet).toSeq.sorted
-        .map(k => Drift.verdict(k, base(k), cur(k)))
-      verdicts.foreach(v => println(
-        // formatLocal(Locale.ROOT) like the per-partition path above: the
-        // f"" interpolator is default-locale-sensitive (psi=0,1234)
-        "drift %s: psi=%.4f ks=%.4f drifted=%s".formatLocal(
-          java.util.Locale.ROOT, v.name, v.psi, v.ks, v.drifted)))
-      verdicts.exists(_.drifted)
+      printVerdicts("", c.verdicts)
+      c.verdicts.exists(_.drifted)
     }
     totalViolations > 0 || drifted
   }
@@ -436,22 +378,56 @@ object Main {
   /** Options that are bare flags; every other option REQUIRES a value. */
   private val boolFlags = Set("parity", "skip-row-key-check", "content-digest")
 
-  /** usage error, not a raw NumberFormatException / a deferred job-time
-    * require deep inside the engine; called from main() so the failure
-    * lands before SparkSession startup. */
-  private def parsePositiveInt(opts: Map[String, String], key: String): Option[Int] =
-    opts.get(key).map { v =>
-      v.toIntOption.filter(_ >= 1).getOrElse {
-        System.err.println(s"--$key requires a positive integer, got '$v'")
-        usage(); sys.exit(2)
-      }
-    }
+  /** What each mode cannot run without: one option of every group. */
+  private val requiredOptions: Map[String, Seq[Seq[String]]] = Map(
+    "kye" -> Seq(Seq("schema"), Seq("model", "compile")),
+    "transcripts" -> Seq(Seq("table")),
+    "ann" -> Seq(Seq("table"), Seq("centroids")))
+
+  /** An option that acts only next to `companion`, when its value
+    * `applies`: a silently ignored option is a lie to the operator —
+    * concurrency and the partition wall-clock watcher only exist on the
+    * checkpointed path. */
+  private final case class Needs(option: String, companion: String,
+                                 applies: String => Boolean = _ => true)
+  private val companions = Seq(Needs("model", "data"),
+    Needs("max-concurrent", "checkpoint", _.toInt > 1), Needs("partition-timeout-ms", "checkpoint"))
+
+  /** The values a numeric option accepts, and how the usage error names them. */
+  private final case class Shape(accepts: String => Boolean, what: String)
+
+  /** A typo'd number costs a usage line, not a raw NumberFormatException
+    * or a job-time require deep inside the engine (`--n-lists 0` would
+    * reach a divide-by-zero in trainCentroids). */
+  private val valueShapes: Map[String, Shape] = {
+    val positive = Shape(_.toIntOption.exists(_ >= 1), "a positive integer")
+    Map("max-group-values" -> positive, "max-concurrent" -> positive, "n-lists" -> positive,
+      "k" -> positive, "n-probe" -> positive,
+      "partition-timeout-ms" -> Shape(_.toLongOption.exists(_ >= 0), "a non-negative integer"))
+  }
+
+  /** The first rule of [[valueShapes]], [[requiredOptions]] and
+    * [[companions]] (checked in that order) that `opts` breaks. */
+  private def brokenRule(mode: String, opts: Map[String, String]): Option[String] =
+    opts.toSeq.sorted.collectFirst {
+      case (k, v) if valueShapes.get(k).exists(!_.accepts(v)) =>
+        s"--$k requires ${valueShapes(k).what}, got '$v'"
+    }.orElse(requiredOptions(mode).collectFirst {
+      case group if !group.exists(opts.contains) =>
+        s"$mode requires ${group.map("--" + _).mkString(" or ")}"
+    }).orElse(companions.collectFirst {
+      case n if opts.get(n.option).exists(n.applies) && !opts.contains(n.companion) =>
+        s"--${n.option} requires --${n.companion}"
+    })
 
   /** `mode --option [value] ...` as the mode and its options, or the usage
-    * error. Anything [[usage]] does not list for the mode, and an option
-    * given twice, is an error: a silently ignored typo (`--checkpiont
-    * m.json`) would run without a manifest, and a run that cannot be
-    * resumed. */
+    * error. This parse alone decides whether a command line can run, so
+    * every error lands before Spark starts. Anything [[usage]] does not
+    * list for the mode, and an option given twice, is an error: a silently
+    * ignored typo (`--checkpiont m.json`) would run without a manifest,
+    * and a run that cannot be resumed. So is a command line that breaks
+    * one of the rules in [[brokenRule]]; the `run*` methods read only
+    * options it checked. */
   private[cli] def parseArgs(args: Seq[String]): Either[String, (String, Map[String, String])] =
     args.toList match {
       case Nil => Left("missing mode")
@@ -468,7 +444,7 @@ object Main {
             // (--data with a forgotten value -> "Path does not exist: .../true")
             case a :: _ => Left(s"option $a requires a value")
           }
-        options(rest, Map.empty).map(mode -> _)
+        options(rest, Map.empty).flatMap(opts => brokenRule(mode, opts).toLeft(mode -> opts))
       }
     }
 

@@ -78,14 +78,21 @@ class CheckpointManifest(path: String) {
       n.put("violations", e.violations)
       n.put("wallMs", e.wallMs)
     }
-    if (file.getParent != null) Files.createDirectories(file.getParent)
-    val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    CheckpointManifest.writeAtomically(file,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
   }
 }
 
 object CheckpointManifest {
+  /** Replace `file` with `text` via a temp sibling moved over it: a reader
+    * sees the old or the new content, never a truncated file. */
+  private[transcript] def writeAtomically(file: Path, text: String): Unit = {
+    if (file.getParent != null) Files.createDirectories(file.getParent)
+    val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
   /** Stable hash of the active constraint set — changing the suite
     * invalidates prior completions. */
   def constraintHash(constraintIds: Seq[String]): String =

@@ -100,6 +100,22 @@ object Drift {
     DriftVerdict(name, p, k, p > psiThreshold || k > ksThreshold)
   }
 
+  /** [[compare]]'s result; each list is sorted by name. */
+  final case class Comparison(verdicts: Seq[DriftVerdict],
+                              producedNotInBaseline: Seq[String], baselineNotProduced: Seq[String])
+
+  /** Verdicts for the metrics both sides have, and the metrics only one
+    * side has. Asymmetries are SURFACED, never silently intersected: a
+    * metric absent from the baseline must not self-compare (psi 0 reads as
+    * "no drift"), and a baseline metric the current run does not produce
+    * must not vanish. */
+  def compare(baseline: Map[String, Histogram], current: Map[String, Histogram]): Comparison =
+    Comparison(
+      (baseline.keySet intersect current.keySet).toSeq.sorted
+        .map(k => verdict(k, baseline(k), current(k))),
+      (current.keySet diff baseline.keySet).toSeq.sorted,
+      (baseline.keySet diff current.keySet).toSeq.sorted)
+
   // ---- baseline snapshot codec (JSON) ---------------------------------------
 
   import com.fasterxml.jackson.databind.ObjectMapper
@@ -129,6 +145,11 @@ object Drift {
     }
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
+
+  /** Write the snapshot atomically: a crash mid-write must not leave
+    * truncated JSON that the next `--baseline` run fails on. */
+  def writeSnapshot(file: java.nio.file.Path, snapshots: Map[String, Histogram]): Unit =
+    CheckpointManifest.writeAtomically(file, snapshotToJson(snapshots))
 
   /** Legacy-label compatibility: pre-`_format` builds' `collect` labeled
     * the NULL bin "null"; it is now [[NullBin]]. A legacy baseline would

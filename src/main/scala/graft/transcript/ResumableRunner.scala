@@ -174,7 +174,7 @@ class ResumableRunner(
       manifest.isComplete(p, snap, cHash)
     }
     val skip = skipped.map(_._1)
-    def validateOne(p: Int, snap: String): PartitionEntry = {
+    def validateOne(p: Int, snap: String): PartitionEntry = try {
       val t0 = System.nanoTime()
       val report = validator.validate(source.readPartition(p), convKeys)
       // one action materializes the partition verdict (rows + violations)
@@ -194,18 +194,10 @@ class ResumableRunner(
         val pdf = source.readPartition(p).select(dc.columns.map(col): _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val hs = dc.histograms(pdf).toSeq.sortBy(_._1)
-          // asymmetries are SURFACED, never silently intersected: a metric
-          // absent from the baseline must not self-compare (psi 0 reads as
-          // "no drift"), and a baseline metric the histograms fn doesn't
-          // produce must not vanish
-          val (covered, uncovered) = hs.partition { case (n, _) => dc.baseline.contains(n) }
+          val hs = dc.histograms(pdf)
+          val c = Drift.compare(dc.baseline, hs)
           dc.onVerdicts(ResumableRunner.PartitionDrift(
-            partitionId = p,
-            verdicts = covered.map { case (n, h) => Drift.verdict(n, dc.baseline(n), h) },
-            producedNotInBaseline = uncovered.map(_._1),
-            baselineNotProduced = (dc.baseline.keySet -- hs.map(_._1)).toSeq.sorted,
-            histograms = hs.toMap))
+            p, c.verdicts, c.producedNotInBaseline, c.baselineNotProduced, hs))
         } finally { pdf.unpersist(); () }
       }
       val entry = PartitionEntry(
@@ -219,6 +211,11 @@ class ResumableRunner(
       // executor storage
       report.cleanup()
       entry
+    } catch {
+      // name the partition: a source fault (a truncated file, a vanished
+      // object) otherwise surfaces as a bare Spark task failure
+      case scala.util.control.NonFatal(e) =>
+        throw new RuntimeException(s"validate p=$p failed: ${e.getMessage}", e)
     }
     val validated = boundedTraverse(todo, (e: (Int, String)) => s"validate p=${e._1}") {
       case (p, snap) => validateOne(p, snap)
@@ -236,9 +233,8 @@ object ResumableRunner {
     * disables the watcher (pure Duration.Inf semantics). */
   val DefaultPartitionTimeoutMs: Long = 6L * 3600 * 1000
 
-  /** One validated partition's drift outcome: verdicts for baseline-covered
-    * metrics, both asymmetry directions surfaced by name, and the raw
-    * histograms (additive across partitions — callers can sum them into a
+  /** One validated partition's [[Drift.compare]] result and its raw
+    * histograms (additive across partitions: callers can sum them into a
     * table-level histogram without a separate full-table scan). */
   final case class PartitionDrift(
       partitionId: Int,

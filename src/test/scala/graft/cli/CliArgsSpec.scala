@@ -52,4 +52,47 @@ class CliArgsSpec extends AnyFunSuite {
     assert(parse("--schema", "s.kye") == Left("unknown mode --schema"))
     assert(parse("kyee") == Left("unknown mode kyee"))
   }
+
+  test("each mode's required options are checked before Spark starts") {
+    assert(parse("transcripts", "--checkpoint", "m.json") == Left("transcripts requires --table"))
+    assert(parse("kye", "--data", "t.parquet", "--model", "M") == Left("kye requires --schema"))
+    assert(parse("kye", "--schema", "s.kye", "--model", "M") ==
+      Left("--model requires --data"))
+    assert(parse("kye", "--schema", "s.kye") == Left("kye requires --model or --compile"))
+    assert(parse("kye", "--schema", "s.kye", "--data", "t.parquet") ==
+      Left("kye requires --model or --compile"))
+    assert(parse("ann", "--table", "t") == Left("ann requires --centroids"))
+    assert(parse("ann", "--centroids", "c.json") == Left("ann requires --table"))
+    // compile-only needs neither --model nor --data
+    assert(parse("kye", "--schema", "s.kye", "--compile", "out.json") ==
+      Right("kye" -> Map("schema" -> "s.kye", "compile" -> "out.json")))
+  }
+
+  test("numeric options must be well-formed") {
+    assert(parse("transcripts", "--table", "d", "--checkpoint", "m.json",
+      "--partition-timeout-ms", "soon") ==
+      Left("--partition-timeout-ms requires a non-negative integer, got 'soon'"))
+    assert(parse("transcripts", "--table", "d", "--checkpoint", "m.json",
+      "--partition-timeout-ms", "-1") ==
+      Left("--partition-timeout-ms requires a non-negative integer, got '-1'"))
+    assert(parse("transcripts", "--table", "d", "--checkpoint", "m.json",
+      "--partition-timeout-ms", "0").isRight)
+    assert(parse("transcripts", "--table", "d", "--max-concurrent", "0") ==
+      Left("--max-concurrent requires a positive integer, got '0'"))
+    assert(parse("kye", "--schema", "s.kye", "--compile", "o.json", "--max-group-values", "x") ==
+      Left("--max-group-values requires a positive integer, got 'x'"))
+    for (k <- Seq("n-lists", "k", "n-probe"))
+      assert(parse("ann", "--table", "t", "--centroids", "c.json", s"--$k", "0") ==
+        Left(s"--$k requires a positive integer, got '0'"))
+  }
+
+  test("concurrency and the partition watcher need --checkpoint") {
+    assert(parse("transcripts", "--table", "d", "--max-concurrent", "4") ==
+      Left("--max-concurrent requires --checkpoint"))
+    assert(parse("transcripts", "--table", "d", "--partition-timeout-ms", "60000") ==
+      Left("--partition-timeout-ms requires --checkpoint"))
+    // one partition at a time is what a run without --checkpoint does anyway
+    assert(parse("transcripts", "--table", "d", "--max-concurrent", "1") ==
+      Right("transcripts" -> Map("table" -> "d", "max-concurrent" -> "1")))
+  }
 }

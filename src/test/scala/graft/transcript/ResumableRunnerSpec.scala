@@ -236,6 +236,34 @@ class ResumableRunnerSpec extends SparkSuite {
       resumed.skipped.sorted == Seq(0, 1))
   }
 
+  test("a truncated parquet file fails the run naming its partition; resume validates only it") {
+    val root = tmpDir("trunc")
+    val data = TranscriptGen.transcripts(spark,
+      TranscriptGen.GenConfig(numConvs = 60, seed = 29, numPartitions = 4))
+    ParquetPartitionedSource.write(data, root)
+    val source = new ParquetPartitionedSource(spark, root)
+    val mpath = s"${tmpDir("tm")}/m.json"
+    // cut the last partition's data file in half (an interrupted copy);
+    // its checksum sibling goes too, so the parquet reader sees the cut
+    val dir = new java.io.File(s"$root/partition_id=3")
+    val f = dir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val intact = Files.readAllBytes(f.toPath)
+    dir.listFiles().filter(_.getName.endsWith(".crc")).foreach(c => assert(c.delete()))
+    Files.write(f.toPath, java.util.Arrays.copyOf(intact, intact.length / 2))
+    val e = intercept[Exception] {
+      new ResumableRunner(source, new CheckpointManifest(mpath), new TranscriptValidator()).run()
+    }
+    assert(e.getMessage.contains("p=3"), s"the failing partition must be named: ${e.getMessage}")
+    assert(new CheckpointManifest(mpath).load().keySet == Set(0, 1, 2),
+      "partitions validated before the failure stay committed; the bad one is not recorded")
+    // repair: the resume validates only the partition that failed
+    Files.write(f.toPath, intact)
+    val resumed = new ResumableRunner(source, new CheckpointManifest(mpath),
+      new TranscriptValidator()).run()
+    assert(resumed.validated.map(_.partitionId) == Seq(3) &&
+      resumed.skipped.sorted == Seq(0, 1, 2))
+  }
+
   test("per-partition drift: skewed partition flags, matching passes, uncovered metric surfaces") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

@@ -75,6 +75,30 @@ class StatsDriftSpec extends SparkSuite {
     assert(Drift.snapshotFromJson(json) == snap)
   }
 
+  test("writeSnapshot replaces the file atomically and leaves no temp file") {
+    val dir = java.nio.file.Files.createTempDirectory("snap")
+    val file = dir.resolve("baseline.json")
+    java.nio.file.Files.writeString(file, "{\"trunc") // a crashed earlier write
+    val snap = Map("role" -> Map("user" -> 3L), "text_len" -> Map("0" -> 1L, "<null>" -> 2L))
+    Drift.writeSnapshot(file, snap)
+    assert(Drift.snapshotFromJson(java.nio.file.Files.readString(file)) == snap)
+    val left = java.nio.file.Files.list(dir)
+    try assert(left.toArray.toSeq == Seq(file), "no .tmp sibling may be left behind")
+    finally left.close()
+  }
+
+  test("compare: verdicts for shared metrics, one-sided metrics named, all sorted") {
+    val h = Map("a" -> 5L, "b" -> 5L)
+    val c = Drift.compare(
+      baseline = Map("role" -> h, "text_len" -> h, "gone" -> h),
+      current = Map("text_len" -> h, "role" -> Map("a" -> 10L), "new2" -> h, "new1" -> h))
+    assert(c.verdicts.map(_.name) == Seq("role", "text_len"))
+    assert(c.verdicts.map(_.drifted) == Seq(true, false))
+    assert(c.verdicts(1) == Drift.verdict("text_len", h, h))
+    assert(c.producedNotInBaseline == Seq("new1", "new2"))
+    assert(c.baselineNotProduced == Seq("gone"))
+  }
+
   test("legacy 'null' bin label normalizes to '<null>' on snapshot load") {
     // baselines written by pre-_format builds used "null" for the NULL
     // bin; a raw load would PSI-compare as one vanished + one novel bin.
