@@ -401,13 +401,15 @@ object SparkEntry {
     // id relation doc_b = doc_a + 10^7 holds only for injected pairs
     // (original ids are far below 10^7), so the slice is fully
     // deterministic. General near-dup behavior (recall + estimate-vs-exact
-    // bounds) stays pinned by DedupPropertySpec. ==
+    // bounds) stays pinned by DedupPropertySpec. The near-dup queries take
+    // the pipeline's `.df` without cleanup(): a query hands back a lazy
+    // DataFrame, and its persisted signatures live as long as the session. ==
     "q_dedup_minhash" -> ((s, dir) =>
       Dedup.minHashNearDuplicates(docsWithDups(s, dir), "doc_id", "text",
         shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7,
         // oracle guard: above any band-bucket size this corpus can produce
         // at any test SF, so the hot-bucket cap can't drop an injected pair
-        maxBucketSize = 1000000)
+        maxBucketSize = 1000000).df
         .filter(col("doc_b") === col("doc_a") + 10000000L)
         .select(col("doc_a"), col("doc_b"), col("est_jaccard"))),
 
@@ -416,7 +418,7 @@ object SparkEntry {
     // and all four 16-bit pigeonhole chunks collide, for ANY hash family. ==
     "q_dedup_simhash" -> ((s, dir) =>
       Dedup.simHashNearDuplicates(docsWithDups(s, dir), "doc_id", "text",
-        maxHamming = 3, maxBucketSize = 1000000)
+        maxHamming = 3, maxBucketSize = 1000000).df
         .filter(col("doc_b") === col("doc_a") + 10000000L)
         .select(col("doc_a"), col("doc_b"), col("hamming"))),
 
@@ -433,7 +435,7 @@ object SparkEntry {
       // present" invariant can't collide with the production hot-bucket
       // guard at any test SF
       Dedup.embeddingNearDuplicates(withDups, "vec_id", "embedding", threshold = 0.999,
-          maxBucketSize = 1000000)
+          maxBucketSize = 1000000).df
         .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
     }),
 
@@ -493,7 +495,7 @@ object SparkEntry {
         (col("id") + 20000000L).as("doc_id"), lit(boiler).as("text"))
       val corpus = docsWithDups(s, dir).select(col("doc_id"), col("text")).union(clones)
       Dedup.minHashNearDuplicates(corpus, "doc_id", "text",
-          shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7) // default maxBucketSize=1000
+          shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7).df // default maxBucketSize=1000
         .filter(col("doc_b") === col("doc_a") + 10000000L ||
           col("doc_a") >= 20000000L || col("doc_b") >= 20000000L)
         .select(col("doc_a"), col("doc_b"), col("est_jaccard"))

@@ -33,6 +33,17 @@ import java.nio.file.{Files, Paths}
 object Main {
 
   def main(args: Array[String]): Unit = {
+    // UTF-8 whatever the locale: the CLI prints data values (multilingual
+    // transcript text) and messages with non-ASCII punctuation, which a
+    // POSIX-locale JVM would otherwise print as '?'
+    val out = new java.io.PrintStream(System.out, true, java.nio.charset.StandardCharsets.UTF_8)
+    val err = new java.io.PrintStream(System.err, true, java.nio.charset.StandardCharsets.UTF_8)
+    System.setOut(out)
+    System.setErr(err)
+    Console.withOut(out)(Console.withErr(err)(run(args)))
+  }
+
+  private def run(args: Array[String]): Unit = {
     // every command-line question is settled BEFORE paying SparkSession
     // startup: a malformed or incomplete command line must cost a usage
     // line, not a cluster spin-up

@@ -12,12 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `numHashes` independent min-hashes, all in a single tight JVM loop per
   * row.
   *
-  * The pure-Catalyst formulation ([[graft.ops.Dedup.minHashSignature]])
-  * evaluates `numHashes × shingles` interpreted lambda trees per row —
-  * higher-order functions don't participate in whole-stage codegen — which
-  * measured ~50 ms/document (H=64, ~1k shingles). This expression does the
-  * same work in ~100 µs: one pass building shingle hashes, then an H-wide
-  * min loop using a splitmix64-derived hash family.
+  * Composed from built-in higher-order functions (a `transform` over the
+  * hash indices of an `array_min` over the shingle array), the same
+  * signature evaluates `numHashes × shingles` interpreted lambda trees per
+  * row — higher-order functions don't participate in whole-stage codegen —
+  * which measured ~50 ms/document (H=64, ~1k shingles). This expression
+  * does the same work in ~100 µs: one pass building shingle hashes, then
+  * an H-wide min loop using a splitmix64-derived hash family.
   *
   * Per SURVEY §4 ordering: compose built-ins first, drop to a custom
   * `Expression` when they genuinely can't express it efficiently — this is

@@ -13,12 +13,9 @@ import org.apache.spark.sql.functions._
   * The near-dup pipelines persist their signature relation at
   * MEMORY_AND_DISK (evictable): it feeds the bucket leg and both sides of
   * the pair join-back, which shuffle on different keys, so without
-  * materialization the native signature scan runs three times. Long-lived
-  * sessions running many pipelines should use the `*Cached` variants and
-  * call [[CachedPipeline.cleanup]] once the result is materialized —
-  * otherwise each call pins its signature relation in executor storage
-  * until eviction (the DataFrame-returning forms exist for one-shot jobs
-  * and the driver's query contract, where the JVM exit reclaims it).
+  * materialization the native signature scan runs three times. Each
+  * pipeline returns that relation with its result as a [[CachedPipeline]]:
+  * call [[CachedPipeline.cleanup]] once the result is materialized.
   */
 object Dedup {
 
@@ -66,23 +63,6 @@ object Dedup {
   def tokens(text: Column): Column =
     filter(split(lower(text), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
 
-  /** Word k-shingles as strings ("a b c"). Expression-only. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    val n = size(toks)
-    when(n >= k,
-      array_distinct(transform(sequence(lit(0), n - k), i =>
-        array_join(slice(toks, i + 1, lit(k)), " "))))
-      .otherwise(array(array_join(toks, " ")))
-  }
-
-  /** MinHash signature: H independent hash functions, each the min of
-    * `xxhash64(shingle, i)` over the shingle set. Pure expression — no
-    * explode, no shuffle. */
-  def minHashSignature(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
-      array_min(transform(shingleArr, s => xxhash64(s, i))))
-
   /** LSH banding: (doc_id, band_id, band_hash) — one row per band. Docs
     * sharing any band hash are near-dup candidates. */
   def lshBuckets(df: DataFrame, idCol: String, sigCol: String,
@@ -126,7 +106,7 @@ object Dedup {
   /** Full MinHash+LSH near-duplicate pipeline:
     * shingle → signature (map-only) → band buckets → within-bucket
     * self-join (the only shuffle) → signature-estimated Jaccard filter.
-    * Returns (doc_a, doc_b, est_jaccard), doc_a < doc_b.
+    * Its `df` is (doc_a, doc_b, est_jaccard), doc_a < doc_b.
     *
     * @param maxBucketSize guard against degenerate buckets (boilerplate
     *   text): buckets larger than this are dropped — at web scale a single
@@ -135,22 +115,13 @@ object Dedup {
   def minHashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
-    minHashNearDuplicatesCached(df, idCol, textCol, shingleK, numHashes,
-      bands, threshold, maxBucketSize).df
-
-  /** [[minHashNearDuplicates]] plus the cleanup handle for the persisted
-    * signature relation (long-lived sessions). */
-  def minHashNearDuplicatesCached(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 32,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): CachedPipeline = {
     require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes): a zero or ragged " +
         "rows-per-band silently degenerates the banding (empty-slice buckets)")
     val rowsPerBand = numHashes / bands
-    // native fused expression: ~500x the throughput of the HOF formulation
-    // (interpreted lambdas), see graft.functions.ShingleMinHash
+    // native fused expression: ~500x the throughput of interpreted HOF
+    // lambdas, see graft.functions.ShingleMinHash
     // token-free docs (punctuation-only/empty text) have a NULL signature
     // and are excluded: a shared degenerate signature would declare them
     // all near-duplicates of each other
@@ -227,22 +198,6 @@ object Dedup {
 
   // ---- SimHash -----------------------------------------------------------------
 
-  /** 64-bit SimHash over word tokens, expression-only: bit j of the
-    * fingerprint is the sign of Σ_tokens (bit j of xxhash64(token) ? +1 : -1).
-    * Bit loop unrolled at plan-build time (Spark's shift functions take
-    * literal amounts only); 64 aggregates over the token-hash array fuse
-    * into one projection. Candidate for a custom codegen Expression if it
-    * ever dominates a profile. */
-  def simHash(text: Column): Column = {
-    val toks = tokens(text)
-    val hashes = transform(toks, t => xxhash64(t))
-    (0 until 64).map { j =>
-      val votes = aggregate(hashes, lit(0),
-        (a, h) => a + when(shiftright(h, j).bitwiseAND(1L) === 1L, 1).otherwise(-1))
-      when(votes > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   def hammingDistance(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** SimHash near-duplicates with Hamming distance ≤ maxHamming, candidate
@@ -255,13 +210,7 @@ object Dedup {
     *   inputs (all short/empty docs have fp ≈ 0) pile into one chunk —
     *   without the cap the self-join is O(bucket²) at web scale. */
   def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame =
-    simHashNearDuplicatesCached(df, idCol, textCol, maxHamming, maxBucketSize).df
-
-  /** [[simHashNearDuplicates]] plus the cleanup handle for the persisted
-    * fingerprint relation (long-lived sessions). */
-  def simHashNearDuplicatesCached(df: DataFrame, idCol: String, textCol: String,
-                                  maxHamming: Int = 3, maxBucketSize: Int = 1000): CachedPipeline = {
+                            maxHamming: Int = 3, maxBucketSize: Int = 1000): CachedPipeline = {
     // token-free docs have a NULL fingerprint and are excluded (see the
     // matching guard in minHashNearDuplicates); persisted for the same
     // three-consumer reason as the minhash signature relation
@@ -289,18 +238,11 @@ object Dedup {
   /** Embedding-cosine near-duplicates: candidates from random-hyperplane
     * sign buckets (native single-pass signature expression,
     * [[graft.functions.HyperplaneSignatures]]), hot buckets dropped, exact
-    * cosine verification on the bounded candidate set. Returns
+    * cosine verification on the bounded candidate set. Its `df` is
     * (id_a, id_b, cosine). */
   def embeddingNearDuplicates(df: DataFrame, idCol: String, vecCol: String,
                               threshold: Double = 0.95, planes: Int = 16,
-                              maxBucketSize: Int = 1000): DataFrame =
-    embeddingNearDuplicatesCached(df, idCol, vecCol, threshold, planes, maxBucketSize).df
-
-  /** [[embeddingNearDuplicates]] plus the cleanup handle for the persisted
-    * signature relation (long-lived sessions). */
-  def embeddingNearDuplicatesCached(df: DataFrame, idCol: String, vecCol: String,
-                                    threshold: Double = 0.95, planes: Int = 16,
-                                    maxBucketSize: Int = 1000): CachedPipeline = {
+                              maxBucketSize: Int = 1000): CachedPipeline = {
     val sig = Similarity.hyperplaneSignature(col(vecCol), planes)
     val withSig = df.select(col(idCol).as("doc_id"), col(vecCol).as("_v"), sig.as("_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -80,23 +80,4 @@ object TextAnalysis {
     * collapsed): stable under cosmetic edits. */
   def contentFingerprint(text: Column): Column =
     xxhash64(regexp_replace(trim(lower(text)), "\\s+", " "))
-
-  /** Winnowing-style fingerprint set: minimum rolling k-gram hash within
-    * each window of w consecutive k-grams (Schleimer et al. local
-    * fingerprinting) — matching any fingerprint ⇒ shared passage.
-    * Token-free docs (punctuation-only/empty/NULL text) get an EMPTY set:
-    * shingles degenerates to [""] there, and its single hash would
-    * declare every such doc a mutual passage match (the same token-free
-    * invariant the minhash/simhash paths pin via NULL signatures). */
-  def winnowedFingerprints(text: Column, k: Int = 5, w: Int = 4): Column = {
-    val grams = Dedup.shingles(text, k)
-    val hashes = transform(grams, g => xxhash64(g))
-    val nWin = size(hashes) - (w - 1)
-    val fps = when(nWin > 0,
-      array_distinct(transform(sequence(lit(0), nWin - 1), i =>
-        array_min(slice(hashes, i + 1, lit(w))))))
-      .otherwise(array_distinct(hashes))
-    when(size(Dedup.tokens(text)) > 0, fps)
-      .otherwise(array().cast("array<bigint>"))
-  }
 }

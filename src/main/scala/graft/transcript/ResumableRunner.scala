@@ -76,98 +76,95 @@ class ResumableRunner(
     * makes every still-queued task bail BEFORE touching Spark, the sink,
     * or the manifest — matching sequential crash semantics (nothing new
     * launches after a failure; in-flight tasks finish and their commits
-    * remain valid completions).
+    * remain valid completions). The first failure in input order is
+    * rethrown as itself.
     *
-    * With `partitionTimeoutMs > 0` the await is NOT `Duration.Inf`: a
-    * watcher wakes on a heartbeat, logs which partitions are in flight
-    * (a wedged 10^12-row run stays diagnosable), and when any task
-    * exceeds its wall-clock budget — e.g. an object store stalling a
-    * ranged GET forever — it fails the cohort LOUDLY with the wedged
-    * partitions named, interrupting the pool. Already-committed manifest
-    * entries stay valid; the run resumes past them after diagnosis.
-    * Sequential mode routes through a 1-thread pool for the same
-    * protection (plain `items.map(f)` could not be timed out). */
-  private def boundedTraverse[A, B](items: Seq[A], what: A => String)(f: A => B): Seq[B] =
-    if (items.isEmpty || (maxConcurrent <= 1 && partitionTimeoutMs <= 0)) items.map(f)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      // daemon threads: shutdownNow() only INTERRUPTS — a task wedged in
-      // interrupt-insensitive native I/O would otherwise keep a non-daemon
-      // pool thread alive and block JVM exit after the cohort already
-      // failed loudly
-      val tf = new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"resumable-partition-${n.getAndIncrement()}")
-          t.setDaemon(true)
-          t
+    * Every item is a plain task on one daemon pool that is shut down right
+    * after submission: queued tasks still run, and no continuation is ever
+    * scheduled on the pool afterwards, so nothing can be rejected. The
+    * caller waits in heartbeats: each logs which partitions are in flight
+    * (a wedged 10^12-row run stays diagnosable), and with
+    * `partitionTimeoutMs > 0` a task over its wall-clock budget — e.g. an
+    * object store stalling a ranged GET forever — fails the cohort LOUDLY
+    * with the wedged partitions named, interrupting the pool.
+    * Already-committed manifest entries stay valid; the run resumes past
+    * them after diagnosis. */
+  private def boundedTraverse[A, B](items: Seq[A], what: A => String)(f: A => B): Seq[B] = {
+    import java.util.concurrent._
+    // daemon threads: shutdownNow() only INTERRUPTS — a task wedged in
+    // interrupt-insensitive native I/O would otherwise keep a non-daemon
+    // pool thread alive and block JVM exit after the cohort already
+    // failed loudly
+    val tf = new ThreadFactory {
+      private val n = new atomic.AtomicInteger(0)
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, s"resumable-partition-${n.getAndIncrement()}")
+        t.setDaemon(true)
+        t
+      }
+    }
+    val pool = Executors.newFixedThreadPool(maxConcurrent, tf)
+    val failed = new atomic.AtomicBoolean(false)
+    val inFlight = new ConcurrentHashMap[String, Long]()
+    val tasks = try items.map { a =>
+      pool.submit(new Callable[B] {
+        def call(): B = {
+          if (failed.get())
+            throw new CancellationException("skipped: another partition in the cohort failed")
+          val key = what(a)
+          inFlight.put(key, System.nanoTime())
+          try f(a)
+          catch { case e: Throwable => failed.set(true); throw e }
+          finally inFlight.remove(key)
+        }
+      })
+    } finally pool.shutdown()
+    val heartbeatMs =
+      if (partitionTimeoutMs > 0) math.max(250L, math.min(60000L, partitionTimeoutMs / 4))
+      else 60000L
+    while (!pool.awaitTermination(heartbeatMs, TimeUnit.MILLISECONDS)) {
+      val now = System.nanoTime()
+      import scala.jdk.CollectionConverters._
+      val running = inFlight.asScala.toSeq
+        .map { case (k, t0) => k -> ((now - t0) / 1000000L) }
+        .sortBy(-_._2)
+      if (partitionTimeoutMs > 0) {
+        val wedged = running.filter(_._2 > partitionTimeoutMs)
+        if (wedged.nonEmpty) {
+          failed.set(true)
+          pool.shutdownNow() // interrupt the wedged tasks
+          throw new TimeoutException(
+            s"cohort failed: ${wedged.size} partition task(s) exceeded the " +
+              s"$partitionTimeoutMs ms budget: " +
+              wedged.map { case (k, ms) => s"$k (${ms} ms)" }.mkString(", ") +
+              " — completed partitions remain committed in the manifest; " +
+              "resume skips them after the wedged partition is diagnosed")
         }
       }
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrent, tf)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val inFlight = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-      try {
-        val agg = Future.traverse(items) { a =>
-          Future {
-            if (failed.get())
-              throw new java.util.concurrent.CancellationException(
-                "skipped: another partition in the cohort failed")
-            val key = what(a)
-            inFlight.put(key, System.nanoTime())
-            try f(a)
-            catch { case e: Throwable => failed.set(true); throw e }
-            finally inFlight.remove(key)
-          }
-        }
-        val heartbeatMs =
-          if (partitionTimeoutMs > 0) math.max(250L, math.min(60000L, partitionTimeoutMs / 4))
-          else 60000L
-        while (!agg.isCompleted) {
-          try { Await.ready(agg, heartbeatMs.millis); () }
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              val now = System.nanoTime()
-              import scala.jdk.CollectionConverters._
-              val running = inFlight.asScala.toSeq
-                .map { case (k, t0) => k -> ((now - t0) / 1000000L) }
-                .sortBy(-_._2)
-              if (partitionTimeoutMs > 0) {
-                val wedged = running.filter(_._2 > partitionTimeoutMs)
-                if (wedged.nonEmpty) {
-                  failed.set(true)
-                  pool.shutdownNow() // interrupt the wedged tasks
-                  throw new java.util.concurrent.TimeoutException(
-                    s"cohort failed: ${wedged.size} partition task(s) exceeded the " +
-                      s"$partitionTimeoutMs ms budget: " +
-                      wedged.map { case (k, ms) => s"$k (${ms} ms)" }.mkString(", ") +
-                      " — completed partitions remain committed in the manifest; " +
-                      "resume skips them after the wedged partition is diagnosed")
-                }
-              }
-              if (running.nonEmpty) System.err.println(
-                s"[resumable] heartbeat: ${running.size} in flight — " +
-                  running.take(8).map { case (k, ms) => s"$k ${ms}ms" }.mkString(", "))
-          }
-        }
-        Await.result(agg, Duration.Zero)
-      } finally pool.shutdown()
+      if (running.nonEmpty) System.err.println(
+        s"[resumable] heartbeat: ${running.size} in flight — " +
+          running.take(8).map { case (k, ms) => s"$k ${ms}ms" }.mkString(", "))
     }
+    tasks.map { t =>
+      try t.get()
+      catch { case e: ExecutionException => throw e.getCause }
+    }
+  }
 
   def run(): RunSummary = {
     val cHash = constraintHash
     // lineage is checked at the PARTITION grain: an append or rewrite of
     // one partition must not force re-validation of every other; the skip
     // predicate lives in the manifest (isComplete) so it can't drift from
-    // what record() wrote. Snapshots are computed ONCE here — before any
-    // scan, so data landing mid-validation invalidates the entry on the
-    // next run — and reused for the manifest entry (in contentDigest mode
-    // a second call would repeat the per-file edge-block IO). The snapshot
-    // phase shares the concurrency bound: in contentDigest mode against an
-    // object store it is two ranged GETs per file, and a serial prelude
-    // over thousands of partitions would idle the cluster before any
-    // validation begins.
+    // what record() wrote. Snapshots are computed here, before any scan,
+    // and validateOne re-reads each one before its commit: a partition
+    // that changed in between (data landing, a directory deleted) fails
+    // instead of committing under a listing it no longer has (one more
+    // listing per partition; in contentDigest mode also its edge-block
+    // reads). The snapshot phase shares the concurrency bound: in
+    // contentDigest mode against an object store it is two ranged GETs per
+    // file, and a serial prelude over thousands of partitions would idle
+    // the cluster before any validation begins.
     val snaps = boundedTraverse(source.partitionIds(), (p: Int) => s"snapshot p=$p")(
       p => p -> source.partitionSnapshotId(p))
     val (skipped, todo) = snaps.partition { case (p, snap) =>
@@ -205,6 +202,10 @@ class ResumableRunner(
         rowsScanned = if (verdict.isNullAt(0)) 0L else verdict.getLong(0),
         violations = if (verdict.isNullAt(1)) 0L else verdict.getLong(1),
         wallMs = (System.nanoTime() - t0) / 1000000L)
+      if (source.partitionSnapshotId(p) != snap) {
+        report.cleanup()
+        throw new IllegalStateException("partition changed during validation")
+      }
       manifest.record(entry)
       // release this partition's persisted seq/violations before moving on
       // — over thousands of partitions the leaked caches would crowd out
@@ -230,7 +231,7 @@ object ResumableRunner {
   /** Default per-partition wall-clock budget: generous (6 h) so healthy
     * giant partitions never trip it, while a ranged GET an object store
     * stalls FOREVER still fails loudly instead of wedging the run. 0
-    * disables the watcher (pure Duration.Inf semantics). */
+    * disables the budget; the wait then only logs heartbeats. */
   val DefaultPartitionTimeoutMs: Long = 6L * 3600 * 1000
 
   /** One validated partition's [[Drift.compare]] result and its raw

@@ -279,7 +279,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
       // (countDistinct then ignores them exactly like pandas nunique), and
       // the reference flags nunique != 1 — a sub-key group whose full keys
       // are ALL missing reads nunique = 0 and is flagged/dropped too
-      val fullKey = keyStructNanSafe(df, model.index)
+      val fullKey = nanSafeKey(df, model.index)
       val badRowSets = ListBuffer.empty[DataFrame]
       for (subIdx <- model.indexes) {
         // NaN sub-keys behave like null ones: pandas groupby drops the NaN
@@ -287,7 +287,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
         // null key — without the mapping, Spark groups NaN AND matches it
         // in the join (NaN = NaN in joins), emitting NonUniqueSubIndex
         // rows the reference never produces
-        val tagged = df.withColumn("_sk", keyStructNanSafe(df, subIdx))
+        val tagged = df.withColumn("_sk", nanSafeKey(df, subIdx))
         // nunique != 1 WITHOUT a distinct aggregate (which plans as two
         // exchanges): over the non-null full keys of a group,
         // nunique >= 2 ⟺ min != max and nunique = 0 ⟺ count = 0 — the
@@ -314,7 +314,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
 
     // ---- S6: cardinality verdicts + group-by-key (one shuffle) ------------
     // NaN index components behave like null ones (see nanSafeCol)
-    val key = keyStructNanSafe(df, model.index)
+    val key = nanSafeKey(df, model.index)
     // Scalar single-valued edges avoid any per-group set materialization:
     // "multiple distinct values" ⟺ min != max, "missing" ⟺ count == 0,
     // grouped value = min — bounded memory under hot keys (SURVEY §4
@@ -667,12 +667,6 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
     case other => other.simpleString
   }
 
-  /** Candidate-key value: raw column for single-edge keys (so alternate
-    * single-column keys compare cross-column, reference `hash_columns`
-    * `loader.py:17-20`), positional-named struct for composites (collision
-    * safe — never string concat). */
-  private def keyStruct(cols: Seq[String]): Column = keyCols(cols.map(col))
-
   /** NaN → NULL for float/double columns (elementwise for arrays) —
     * pandas `dropna`/groupby drop NaN exactly like null, so NaN must
     * never form its own Spark group, match itself in a join-back
@@ -688,9 +682,13 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
 
   /** Key struct over NaN-mapped columns: a NaN key component behaves like
     * a null one (reference groupby label semantics). */
-  private def keyStructNanSafe(df: DataFrame, cols: Seq[String]): Column =
+  private def nanSafeKey(df: DataFrame, cols: Seq[String]): Column =
     keyCols(cols.map(nanSafeCol(df, _)))
 
+  /** Candidate-key value: raw column for single-edge keys (so alternate
+    * single-column keys compare cross-column, reference `hash_columns`
+    * `loader.py:17-20`), positional-named struct for composites (collision
+    * safe — never string concat). */
   private def keyCols(cols: Seq[Column]): Column =
     if (cols.size == 1) cols.head
     else struct(cols.zipWithIndex.map { case (c, i) => c.as(s"_$i") }: _*)

@@ -9,13 +9,18 @@ import java.nio.file.Files
   * sys.exit, so in-process invocation would kill the test runner): exit
   * code 65 on violations (the reference CLI's convention, kye/cli.py:80-83),
   * checkpoint resume skipping validated partitions, and --max-concurrent on
-  * the partition-wise path, plus the ann centroid-artifact lifecycle.
-  * One SparkSession cold-start per invocation (~10 s each) — five
-  * invocations total, the suite's deliberate e2e budget.
+  * the partition-wise path, the ann centroid-artifact lifecycle and UTF-8
+  * output under the POSIX locale. One SparkSession cold-start per
+  * invocation (~10 s each) — six such invocations total, the suite's
+  * deliberate e2e budget.
   */
 class CliE2eSpec extends SparkSuite {
 
-  private def runCli(args: String*): (Int, String) = {
+  private def runCli(args: String*): (Int, String) = runCliIn(Map.empty)(args: _*)
+
+  /** Runs the CLI with `env` added to its environment; the child's
+    * merged stdout/stderr is decoded as UTF-8, whatever this JVM's locale. */
+  private def runCliIn(env: Map[String, String])(args: String*): (Int, String) = {
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
       "java.base/java.lang.reflect", "java.base/java.io",
@@ -30,13 +35,12 @@ class CliE2eSpec extends SparkSuite {
       "-cp", System.getProperty("java.class.path"),
       "-Dspark.ui.enabled=false", "-Xmx4g") ++ addOpens ++
       Seq("graft.cli.Main") ++ args
-    val out = new StringBuilder
-    val logger = scala.sys.process.ProcessLogger(
-      l => out.synchronized { out.append(l).append('\n'); () },
-      l => out.synchronized { out.append(l).append('\n'); () })
-    val env = Seq("SPARK_MASTER" -> "local[4]", "SPARK_GRAFT_CPUS" -> "4")
-    val code = scala.sys.process.Process(cmd, None, env: _*).!(logger)
-    (code, out.synchronized(out.toString))
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+    (Map("SPARK_MASTER" -> "local[4]", "SPARK_GRAFT_CPUS" -> "4") ++ env)
+      .foreach { case (k, v) => pb.environment().put(k, v) }
+    val proc = pb.start()
+    val out = proc.getInputStream.readAllBytes()
+    (proc.waitFor(), new String(out, java.nio.charset.StandardCharsets.UTF_8))
   }
 
   test("ann mode: first run trains + persists, second run loads, corpus change retrains") {
@@ -120,5 +124,21 @@ class CliE2eSpec extends SparkSuite {
     assert(code == 2, s"usage error expected, got $code:\n${out.takeRight(800)}")
     assert(out.contains("--partition-timeout-ms requires"), out.takeRight(800))
     assert(!out.contains("SparkContext"), "must fail before Spark startup")
+  }
+
+  test("output is UTF-8 under the POSIX locale: the baseline warning keeps its em-dash") {
+    val root = Files.createTempDirectory("cli-utf8").toString
+    ParquetPartitionedSource.write(TranscriptGen.transcripts(spark,
+      TranscriptGen.GenConfig(numConvs = 40, seed = 43, numPartitions = 2)), root)
+    // a baseline without the text_len metric: the run warns that it is
+    // not drift-checked, in a line carrying an em-dash
+    val baseline = Files.createTempDirectory("cli-b").resolve("b.json")
+    graft.transcript.Drift.writeSnapshot(baseline,
+      Map("role" -> Map("user" -> 1L, "assistant" -> 1L)))
+    val (code, out) = runCliIn(Map("LC_ALL" -> "C"))(
+      "transcripts", "--table", root, "--baseline", baseline.toString)
+    assert(code == 0 || code == 65, s"run failed rc=$code\n${out.takeRight(2000)}")
+    assert(out.contains("metric 'text_len' missing from the baseline — NOT drift-checked"),
+      out.takeRight(2000))
   }
 }

@@ -38,9 +38,9 @@ class DedupPlanShapeSpec extends SparkSuite {
     val plans = Seq(
       "exact" -> Dedup.exactDuplicates(docs, "doc_id", "text"),
       "minhash" -> Dedup.minHashNearDuplicates(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7),
-      "simhash" -> Dedup.simHashNearDuplicates(docs, "doc_id", "text"),
-      "embedding" -> Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding"))
+        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7).df,
+      "simhash" -> Dedup.simHashNearDuplicates(docs, "doc_id", "text").df,
+      "embedding" -> Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding").df)
     for ((name, df) <- plans) {
       val s = executed(df).toString
       assert(!s.contains("collect_list") && !s.contains("collect_set"),
@@ -59,9 +59,9 @@ class DedupPlanShapeSpec extends SparkSuite {
 
   test("no unbounded cartesian products in any near-dup pipeline") {
     val plans = Seq(
-      Dedup.minHashNearDuplicates(docs, "doc_id", "text"),
-      Dedup.simHashNearDuplicates(docs, "doc_id", "text"),
-      Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding"),
+      Dedup.minHashNearDuplicates(docs, "doc_id", "text").df,
+      Dedup.simHashNearDuplicates(docs, "doc_id", "text").df,
+      Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding").df,
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3))
     for (df <- plans) {
       val tree = planTree(executed(df))

@@ -32,7 +32,7 @@ class DedupPropertySpec extends SparkSuite {
 
   test("minhash: every injected exact duplicate is recalled with est=1.0") {
     val pairs = Dedup.minHashNearDuplicates(docsWithDups, "doc_id", "text",
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7)
+        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.7).df
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val injected = docs.filter(col("doc_id") % 17 === 0)
       .select("doc_id").collect().map(_.getLong(0))
@@ -48,7 +48,7 @@ class DedupPropertySpec extends SparkSuite {
     val texts = docsWithDups.select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val emitted = Dedup.minHashNearDuplicates(docsWithDups, "doc_id", "text",
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
+        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5).df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(emitted.nonEmpty)
     emitted.foreach { case (a, b, est) =>
@@ -61,7 +61,7 @@ class DedupPropertySpec extends SparkSuite {
 
   test("simhash: injected exact duplicates recalled at hamming 0") {
     val pairs = Dedup.simHashNearDuplicates(docsWithDups, "doc_id", "text",
-        maxHamming = 3)
+        maxHamming = 3).df
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     val injected = docs.filter(col("doc_id") % 17 === 0)
       .select("doc_id").collect().map(_.getLong(0))
@@ -80,17 +80,17 @@ class DedupPropertySpec extends SparkSuite {
   test("minhash: hot bucket above maxBucketSize emits nothing (guard)") {
     assert(Dedup.minHashNearDuplicates(degenerate, "doc_id", "text",
       shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5,
-      maxBucketSize = 100).count() === 0)
+      maxBucketSize = 100).df.count() === 0)
     assert(Dedup.minHashNearDuplicates(degenerate, "doc_id", "text",
       shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5,
-      maxBucketSize = 300).count() === 200L * 199 / 2)
+      maxBucketSize = 300).df.count() === 200L * 199 / 2)
   }
 
   test("simhash: hot chunk above maxBucketSize emits nothing (guard)") {
     assert(Dedup.simHashNearDuplicates(degenerate, "doc_id", "text",
-      maxHamming = 3, maxBucketSize = 100).count() === 0)
+      maxHamming = 3, maxBucketSize = 100).df.count() === 0)
     assert(Dedup.simHashNearDuplicates(degenerate, "doc_id", "text",
-      maxHamming = 3, maxBucketSize = 300).count() === 200L * 199 / 2)
+      maxHamming = 3, maxBucketSize = 300).df.count() === 200L * 199 / 2)
   }
 
   test("token-free documents are never declared near-duplicates of each other") {
@@ -100,8 +100,8 @@ class DedupPropertySpec extends SparkSuite {
       (5L, "real words here appear three times words here appear"))
       .toDF("doc_id", "text")
     assert(Dedup.minHashNearDuplicates(junk, "doc_id", "text",
-      shingleK = 2, numHashes = 64, bands = 16, threshold = 0.1).count() === 0)
-    assert(Dedup.simHashNearDuplicates(junk, "doc_id", "text", maxHamming = 10).count() === 0)
+      shingleK = 2, numHashes = 64, bands = 16, threshold = 0.1).df.count() === 0)
+    assert(Dedup.simHashNearDuplicates(junk, "doc_id", "text", maxHamming = 10).df.count() === 0)
     assert(Dedup.ngramJaccardPairs(junk, "doc_id", "text", n = 2, threshold = 0.1).count() === 0)
   }
 
@@ -109,8 +109,8 @@ class DedupPropertySpec extends SparkSuite {
     val vecs = (0L until 100L).map(i => (i, Array(1.0f, 0.5f, 0.25f)))
       .toDF("vec_id", "embedding")
     assert(Dedup.embeddingNearDuplicates(vecs, "vec_id", "embedding",
-      threshold = 0.99, maxBucketSize = 50).count() === 0)
+      threshold = 0.99, maxBucketSize = 50).df.count() === 0)
     assert(Dedup.embeddingNearDuplicates(vecs, "vec_id", "embedding",
-      threshold = 0.99, maxBucketSize = 100).count() === 100L * 99 / 2)
+      threshold = 0.99, maxBucketSize = 100).df.count() === 100L * 99 / 2)
   }
 }

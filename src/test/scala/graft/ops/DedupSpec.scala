@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSuite {
   import spark.implicits._
@@ -21,20 +20,10 @@ class DedupSpec extends SparkSuite {
     assert(pairs == Set((1L, 2L), (1L, 5L)))
   }
 
-  test("shingles: distinct word k-grams, short docs degrade to one shingle") {
-    val sh = docs.select(Dedup.shingles(col("text"), 3).as("s"))
-      .collect().map(_.getSeq[String](0))
-    assert(sh(0).contains("the quick brown"))
-    assert(sh(0).contains("quick brown fox"))
-    val short = Seq((9L, "two words")).toDF("doc_id", "text")
-      .select(Dedup.shingles(col("text"), 3)).collect()(0).getSeq[String](0)
-    assert(short == Seq("two words"))
-  }
-
   test("minhash LSH finds near-duplicates, skips unrelated docs") {
     val nd = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
       shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nd.contains((1L, 2L))) // exact dups always collide
     assert(nd.contains((1L, 3L)) || nd.contains((2L, 3L)) || nd.contains((3L, 5L)),
       s"near-dup 3 should pair with 1/2/5, got $nd")
@@ -48,18 +37,13 @@ class DedupSpec extends SparkSuite {
     // long-lived session permanently accumulated cached relations
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
-    val r = Dedup.minHashNearDuplicatesCached(docs, "doc_id", "text",
+    val r = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
       shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
     val pairs = r.df.collect()
     assert(pairs.nonEmpty)
     assert(!cm.isEmpty, "pipeline must have persisted its signatures")
     r.cleanup()
     assert(cm.isEmpty, "cleanup must release every persisted relation")
-    // DataFrame-returning form still matches the Cached result
-    val plain = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
-      shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5).collect()
-    assert(plain.map(_.toString).sorted.sameElements(pairs.map(_.toString).sorted))
-    spark.sharedState.cacheManager.clearCache()
   }
 
   test("exact ngram jaccard matches hand-computed value") {
@@ -72,14 +56,8 @@ class DedupSpec extends SparkSuite {
   }
 
   test("simhash: identical text = identical fingerprint; near text = small hamming") {
-    val fp = docs.select(col("doc_id"), Dedup.simHash(col("text")).as("fp"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fp(1L) == fp(2L))
-    val dNear = java.lang.Long.bitCount(fp(1L) ^ fp(3L))
-    val dFar = java.lang.Long.bitCount(fp(1L) ^ fp(4L))
-    assert(dNear < dFar, s"near=$dNear far=$dFar")
     val nd = Dedup.simHashNearDuplicates(docs, "doc_id", "text", maxHamming = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nd.contains((1L, 2L)))
   }
 
@@ -91,7 +69,7 @@ class DedupSpec extends SparkSuite {
       (4L, Array(0.0f, 1.0f, -0.5f, 0.3f))
     ).toDF("vec_id", "embedding")
     val nd = Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding", threshold = 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nd == Set((1L, 2L)))
   }
 
@@ -99,8 +77,6 @@ class DedupSpec extends SparkSuite {
     val documents = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val exact = Dedup.exactDuplicates(documents, "doc_id", "text")
     assert(exact.count() >= 0) // runs end to end
-    val sh = documents.select(Dedup.shingles(col("text"), 3)).count()
-    assert(sh == documents.count())
   }
 
   test("duplicate injection keeps the input's column order") {

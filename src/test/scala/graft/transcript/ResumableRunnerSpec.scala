@@ -359,4 +359,76 @@ class ResumableRunnerSpec extends SparkSuite {
     assert(p0.count() > 0)
     assert(source.read().count() == data.count())
   }
+
+  test("a failed cohort prints no RejectedExecutionException after the run returns") {
+    val root = tmpDir("reject")
+    val data = TranscriptGen.transcripts(spark,
+      TranscriptGen.GenConfig(numConvs = 80, seed = 37, numPartitions = 4))
+    ParquetPartitionedSource.write(data, root)
+    val source = new ParquetPartitionedSource(spark, root)
+    // p0's sink fails; p1 is still in flight and finishes only after the
+    // run has thrown, so any task-completion work scheduled on the
+    // partition pool lands after its shutdown
+    val p0Failed = new java.util.concurrent.CountDownLatch(1)
+    val p1Done = new java.util.concurrent.CountDownLatch(1)
+    val sink: (Int, TranscriptReport) => Unit = (p, _) => p match {
+      case 0 => p0Failed.countDown(); throw new RuntimeException("sink boom p0")
+      case 1 =>
+        try { p0Failed.await(60, java.util.concurrent.TimeUnit.SECONDS); Thread.sleep(500) }
+        finally p1Done.countDown()
+      case _ => ()
+    }
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    try {
+      val e = intercept[RuntimeException] {
+        new ResumableRunner(source, new CheckpointManifest(s"${tmpDir("rm")}/m.json"),
+          new TranscriptValidator(), None, Some(sink), maxConcurrent = 2).run()
+      }
+      assert(e.getMessage.startsWith("validate p=0 failed: sink boom p0"), e.getMessage)
+      assert(p1Done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Thread.sleep(1000) // let p1's thread finish its task
+    } finally System.setErr(stderr)
+    assert(!captured.toString.contains("RejectedExecutionException"), captured.toString)
+  }
+
+  test("a partition deleted between listing and read never commits under its old listing") {
+    val root = tmpDir("vanish")
+    val data = TranscriptGen.transcripts(spark,
+      TranscriptGen.GenConfig(numConvs = 60, seed = 41, numPartitions = 3))
+    ParquetPartitionedSource.write(data, root)
+    val inner = new ParquetPartitionedSource(spark, root)
+    // concurrent maintenance: partition 1's directory disappears after the
+    // runner took its snapshot, on the first read
+    val deleted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val vanishing = new graft.io.TableSource {
+      def snapshotId: String = inner.snapshotId
+      override def partitionSnapshotId(p: Int): String = inner.partitionSnapshotId(p)
+      def partitionIds(): Seq[Int] = inner.partitionIds()
+      def readPartition(p: Int): org.apache.spark.sql.DataFrame = {
+        if (p == 1 && deleted.compareAndSet(false, true)) {
+          val dir = java.nio.file.Paths.get(root, "partition_id=1")
+          Files.walk(dir).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+            .forEach(f => Files.delete(f))
+        }
+        inner.readPartition(p)
+      }
+      def read(): org.apache.spark.sql.DataFrame = inner.read()
+    }
+    val manifest = new CheckpointManifest(s"${tmpDir("vm")}/m.json")
+    val outcome = scala.util.Try(
+      new ResumableRunner(vanishing, manifest, new TranscriptValidator()).run())
+    assert(deleted.get())
+    // either the run fails loudly naming the partition, or whatever it
+    // commits for p=1 carries the listing it actually validated — never
+    // the old, data-bearing one a later run would skip as validated
+    outcome.failed.foreach(e =>
+      assert(e.getMessage.contains("validate p=1 failed"), e.getMessage))
+    manifest.load().get(1).foreach(entry =>
+      assert(entry.snapshotId == inner.partitionSnapshotId(1),
+        s"p=1 committed under a listing it did not validate: $entry"))
+    assert(manifest.load().contains(1) || outcome.isFailure,
+      "p=1 must either commit or fail the run")
+  }
 }
