@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.CompiledSchema
 import graft.validate.{Validator, ValidatorConfig}
-import graft.io.ParquetPartitionedSource
+import graft.io.{ParquetPartitionedSource, TextFile}
 import graft.transcript._
-import java.nio.file.{Files, Paths}
 
 /** CLI mirroring the reference's entry points (kyepy kye/cli.py):
   *
@@ -115,7 +114,7 @@ object Main {
 
   private def runKye(spark: SparkSession, opts: Map[String, String]): Boolean = {
     val schemaPath = opts("schema")
-    val text = Files.readString(Paths.get(schemaPath))
+    val text = readOption(spark, "schema", schemaPath)
     // E1 path: `.kye` source compiles through the DSL front-end; E2 path:
     // precompiled JSON/YAML artifacts load directly (kyepy kye.py:60-63)
     // the pure compile result (no native-type merge) is what --compile
@@ -146,7 +145,7 @@ object Main {
       val artifact =
         if (out.endsWith(".yaml") || out.endsWith(".yml")) compiledOnly.toYaml
         else compiledOnly.toJson
-      Files.writeString(Paths.get(out), artifact)
+      TextFile.write(out, artifact, spark.sparkContext.hadoopConfiguration)
       println(s"wrote compiled artifact $out")
     }
     if (!opts.contains("model")) return false // compile-only (parseArgs required --compile)
@@ -174,24 +173,20 @@ object Main {
             "corrupt the report's row anchors; omit --row-key for positional ids")
         // duplicate or NULL key values would conflate violations from
         // different rows and corrupt the highlighted-slice isin lookup.
-        // The guard is one aggregate job but a FULL extra pass over the
-        // input (count + exact count_distinct) — the right default for
-        // correctness; callers who already guarantee a unique non-null key
-        // (e.g. it IS the table's primary key) skip the pass with
-        // --skip-row-key-check at 10^12-row scale.
-        if (!opts.contains("skip-row-key-check")) {
-          val kc = data.agg(
-            count(lit(1)).as("n"),
-            count_distinct(col(k)).as("d"),
-            count(when(col(k).isNull, 1)).as("nulls")).collect()(0)
-          require(kc.getLong(2) == 0,
-            s"--row-key column '$k' contains ${kc.getLong(2)} NULLs — row " +
-              "anchors must be non-null; omit --row-key for positional ids")
-          require(kc.getLong(0) == kc.getLong(1),
-            s"--row-key column '$k' is not unique (${kc.getLong(0)} rows, " +
-              s"${kc.getLong(1)} distinct values) — duplicate anchors would " +
-              "conflate violations from different rows")
-        }
+        // The key comes from outside the program, so the guard always
+        // runs: one aggregate job, a full extra pass over the input
+        // (count + exact count_distinct).
+        val kc = data.agg(
+          count(lit(1)).as("n"),
+          count_distinct(col(k)).as("d"),
+          count(when(col(k).isNull, 1)).as("nulls")).collect()(0)
+        require(kc.getLong(2) == 0,
+          s"--row-key column '$k' contains ${kc.getLong(2)} NULLs — row " +
+            "anchors must be non-null; omit --row-key for positional ids")
+        require(kc.getLong(0) == kc.getLong(1),
+          s"--row-key column '$k' is not unique (${kc.getLong(0)} rows, " +
+            s"${kc.getLong(1)} distinct values) — duplicate anchors would " +
+            "conflate violations from different rows")
         data.withColumn("_row", col(k).cast("long"))
       case None if isParquet(dataPath) => Validator.withParquetRowIds(spark, dataPath)
       case None => Validator.withRowIds(data)
@@ -265,7 +260,7 @@ object Main {
     // path forces it up front by necessity (the per-partition leg needs
     // it before the loop), which loses nothing — the manifest is intact.
     lazy val baselineSnap: Option[Map[String, Drift.Histogram]] =
-      opts.get("baseline").map(p => Drift.snapshotFromJson(Files.readString(Paths.get(p))))
+      opts.get("baseline").map(p => Drift.snapshotFromJson(readOption(spark, "baseline", p)))
     def histogramsOf(df: DataFrame): Map[String, Drift.Histogram] = Map(
       "role" -> Drift.collect(StatsProfiler.categoricalHistogram(df, col("role"))),
       "text_len" -> Drift.collect(
@@ -350,7 +345,7 @@ object Main {
         partHistSums.synchronized(partHistSums.toMap)
       else histogramsOf(source.read())
     opts.get("write-baseline").foreach { p =>
-      Drift.writeSnapshot(Paths.get(p), cur)
+      Drift.writeSnapshot(p, cur)
       println(s"wrote baseline snapshot $p")
     }
     val drifted = baselineSnap.exists { base =>
@@ -368,6 +363,11 @@ object Main {
     totalViolations > 0 || drifted
   }
 
+  /** The text of the file `--option` names; a missing file is an error. */
+  private def readOption(spark: SparkSession, option: String, path: String): String =
+    TextFile.read(path, spark.sparkContext.hadoopConfiguration)
+      .getOrElse(throw new java.io.FileNotFoundException(s"--$option $path does not exist"))
+
   private def isParquet(path: String): Boolean =
     !(path.endsWith(".csv") || path.endsWith(".json") || path.endsWith(".jsonl"))
 
@@ -381,13 +381,13 @@ object Main {
   /** The options of each mode: exactly those [[usage]] lists. */
   private val modeOptions: Map[String, Set[String]] = Map(
     "kye" -> Set("schema", "data", "model", "violations", "parity", "row-key", "compile",
-      "max-group-values", "skip-row-key-check"),
+      "max-group-values"),
     "transcripts" -> Set("table", "conv-keys", "checkpoint", "violations", "baseline",
       "write-baseline", "content-digest", "max-concurrent", "partition-timeout-ms"),
     "ann" -> Set("table", "centroids", "id", "vec", "n-lists", "k", "n-probe", "queries", "out"))
 
   /** Options that are bare flags; every other option REQUIRES a value. */
-  private val boolFlags = Set("parity", "skip-row-key-check", "content-digest")
+  private val boolFlags = Set("parity", "content-digest")
 
   /** What each mode cannot run without: one option of every group. */
   private val requiredOptions: Map[String, Seq[Seq[String]]] = Map(
@@ -463,7 +463,7 @@ object Main {
     """usage:
       |  graft.cli.Main kye --schema s.kye[.json|.yaml] [--data table.parquet --model M]
       |                 [--violations out] [--parity] [--row-key col] [--compile out.json]
-      |                 [--max-group-values K] [--skip-row-key-check]
+      |                 [--max-group-values K]
       |  graft.cli.Main transcripts --table dir [--conv-keys path] [--checkpoint m.json]
       |                 [--violations out] [--baseline h.json] [--write-baseline h.json]
       |                 [--content-digest] [--max-concurrent N] [--partition-timeout-ms MS]

@@ -1,7 +1,10 @@
 package graft.ops
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and an LSH-bucketed
@@ -209,83 +212,33 @@ object Similarity {
     s"${r.getLong(0)}:$x:$s"
   }
 
-  /** Write the centroid artifact (JSON) through the Hadoop FileSystem of
-    * the path's scheme — file:, hdfs:// and s3a:// all work, like the
-    * lineage layer. */
+  /** Write the centroid artifact (JSON) through [[graft.io.TextFile]]: any
+    * Hadoop FileSystem scheme, and never truncated JSON at the path, which
+    * [[loadCentroids]] would raise on (corrupt != absent). */
   def saveCentroids(spark: org.apache.spark.sql.SparkSession, path: String,
                     index: CentroidIndex): Unit = {
-    val sb = new java.lang.StringBuilder
-    sb.append("{\"_format\":1,\"corpusDigest\":")
-      .append(graft.io.JsonText.quote(index.corpusDigest))
-      .append(",\"nLists\":").append(index.centroids.length)
-      .append(",\"dim\":").append(if (index.centroids.isEmpty) 0 else index.centroids.head.length)
-      .append(",\"centroids\":[")
-    var i = 0
-    while (i < index.centroids.length) {
-      if (i > 0) sb.append(',')
-      sb.append(index.centroids(i).mkString("[", ",", "]"))
-      i += 1
-    }
-    sb.append("]}")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // temp-sibling + rename commit. NOT fully atomic: between the
-    // pre-delete and the rename (and on object stores where rename is
-    // copy+delete) a crash can leave NO artifact at the final path — that
-    // is safe-by-recovery, not lossless: absent triggers a retrain on the
-    // next run. What the pattern DOES guarantee is that the final path is
-    // never truncated/partial JSON, which loadCentroids would (by design)
-    // treat as corrupt and RAISE on every subsequent run (same pattern as
-    // the checkpoint manifest). On filesystems with overwriting rename
-    // (HDFS/local) we skip the pre-delete so the final path is old-or-new
-    // throughout.
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val renamedOver =
-      try {
-        // FileContext exposes the public overwriting rename (FileSystem's
-        // 3-arg variant is protected); HDFS/local implement it as a single
-        // metadata op — no no-artifact window
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-          .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        true
-      } catch { case scala.util.control.NonFatal(_) => false }
-    if (!renamedOver) {
-      if (fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p), s"failed to commit centroid artifact to $path")
-    }
+    val json = new ObjectMapper().registerModule(DefaultScalaModule).writeValueAsString(ListMap(
+      "_format" -> 1, "corpusDigest" -> index.corpusDigest, "nLists" -> index.centroids.length,
+      "dim" -> index.centroids.headOption.fold(0)(_.length), "centroids" -> index.centroids))
+    graft.io.TextFile.write(path, json, spark.sparkContext.hadoopConfiguration)
   }
 
   /** Load a centroid artifact; None when the path does not exist. A
     * malformed artifact raises (corrupt != absent). */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): Option[CentroidIndex] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      require(root.get("_format") != null && root.get("_format").asInt() == 1,
-        s"unsupported centroid artifact format in $path")
-      val cents = root.get("centroids")
-      val digestNode = root.get("corpusDigest")
-      val dimNode = root.get("dim")
-      require(cents != null && cents.isArray && digestNode != null && dimNode != null,
+  def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): Option[CentroidIndex] =
+    graft.io.TextFile.read(path, spark.sparkContext.hadoopConfiguration).map { text =>
+      val root = new ObjectMapper().readTree(text)
+      require(root.path("_format").asInt() == 1, s"unsupported centroid artifact format in $path")
+      val (cents, digest, dim) = (root.get("centroids"), root.get("corpusDigest"), root.get("dim"))
+      require(cents != null && cents.isArray && digest != null && dim != null,
         s"malformed centroid artifact in $path (missing centroids/corpusDigest/dim)")
       val arr = Array.tabulate(cents.size()) { i =>
         val row = cents.get(i)
         Array.tabulate(row.size())(j => row.get(j).asDouble())
       }
-      val dim = dimNode.asInt()
-      require(arr.forall(_.length == dim), s"ragged centroid artifact in $path")
-      Some(CentroidIndex(digestNode.asText(), arr))
+      require(arr.forall(_.length == dim.asInt()), s"ragged centroid artifact in $path")
+      CentroidIndex(digest.asText(), arr)
     }
-  }
 
   /** Train-or-load: reuse the persisted centroids when their corpus digest
     * matches the current corpus, retrain (and overwrite the artifact)

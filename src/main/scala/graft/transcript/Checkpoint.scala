@@ -1,7 +1,8 @@
 package graft.transcript
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.io.TextFile
 import scala.jdk.CollectionConverters._
 
 /** Per-partition completion record with lineage: a partition is skippable
@@ -17,10 +18,12 @@ final case class PartitionEntry(
     violations: Long,
     wallMs: Long)
 
-/** JSON manifest with atomic commit (write-temp + rename — the sandbox
-  * stand-in for an object-store conditional put; the TableSource trait
-  * boundary keeps the swap to a real catalog mechanical). Idempotent:
-  * re-recording a partition overwrites its entry.
+/** JSON manifest at a path of any Hadoop FileSystem scheme, like the
+  * table's, committed atomically by [[TextFile.write]] (the stand-in for an
+  * object-store conditional put; the TableSource trait boundary keeps the
+  * swap to a real catalog mechanical). The Hadoop configuration is the
+  * active session's at construction. Idempotent: re-recording a partition
+  * overwrites its entry.
   *
   * Single-writer per manifest file (the runner is): entries are parsed
   * once at construction and cached — `record` appends in memory and
@@ -29,15 +32,13 @@ final case class PartitionEntry(
   * would (at the north rule's thousands of partitions that difference
   * is real driver time). */
 class CheckpointManifest(path: String) {
-  private val mapper = new ObjectMapper()
-  private val file: Path = Paths.get(path)
+  import CheckpointManifest.mapper
+  private val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
   private var entries: Map[Int, PartitionEntry] = parse()
 
   private def parse(): Map[Int, PartitionEntry] = {
-    if (!Files.exists(file)) return Map.empty
-    val root = mapper.readTree(Files.readString(file))
-    val arr = root.get("partitions")
+    val arr = TextFile.read(path, conf).map(mapper.readTree(_).get("partitions")).orNull
     if (arr == null) return Map.empty
     // a legacy or partially-written entry (missing/null fields) is INVALID
     // lineage, not a crash: dropping it re-validates that partition, which
@@ -66,32 +67,13 @@ class CheckpointManifest(path: String) {
 
   def record(entry: PartitionEntry): Unit = synchronized {
     entries += (entry.partitionId -> entry)
-    val all = entries
-    val root = mapper.createObjectNode()
-    val arr = root.putArray("partitions")
-    for (e <- all.values.toSeq.sortBy(_.partitionId)) {
-      val n = arr.addObject()
-      n.put("partitionId", e.partitionId)
-      n.put("snapshotId", e.snapshotId)
-      n.put("constraintHash", e.constraintHash)
-      n.put("rowsScanned", e.rowsScanned)
-      n.put("violations", e.violations)
-      n.put("wallMs", e.wallMs)
-    }
-    CheckpointManifest.writeAtomically(file,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
+    TextFile.write(path, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(
+      Map("partitions" -> entries.values.toSeq.sortBy(_.partitionId))), conf)
   }
 }
 
 object CheckpointManifest {
-  /** Replace `file` with `text` via a temp sibling moved over it: a reader
-    * sees the old or the new content, never a truncated file. */
-  private[transcript] def writeAtomically(file: Path, text: String): Unit = {
-    if (file.getParent != null) Files.createDirectories(file.getParent)
-    val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
-    Files.writeString(tmp, text)
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
   /** Stable hash of the active constraint set — changing the suite
     * invalidates prior completions. */

@@ -146,10 +146,12 @@ object Drift {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  /** Write the snapshot atomically: a crash mid-write must not leave
-    * truncated JSON that the next `--baseline` run fails on. */
-  def writeSnapshot(file: java.nio.file.Path, snapshots: Map[String, Histogram]): Unit =
-    CheckpointManifest.writeAtomically(file, snapshotToJson(snapshots))
+  /** Write the snapshot atomically through the path's FileSystem: a crash
+    * mid-write must not leave truncated JSON that the next `--baseline`
+    * run fails on. */
+  def writeSnapshot(path: String, snapshots: Map[String, Histogram]): Unit =
+    graft.io.TextFile.write(path, snapshotToJson(snapshots),
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
 
   /** Legacy-label compatibility: pre-`_format` builds' `collect` labeled
     * the NULL bin "null"; it is now [[NullBin]]. A legacy baseline would

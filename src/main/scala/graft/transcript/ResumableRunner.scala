@@ -174,44 +174,43 @@ class ResumableRunner(
     def validateOne(p: Int, snap: String): PartitionEntry = try {
       val t0 = System.nanoTime()
       val report = validator.validate(source.readPartition(p), convKeys)
-      // one action materializes the partition verdict (rows + violations)
-      val verdict = report.partitionVerdicts
-        .agg(sum(col("rows_scanned")), sum(col("violations"))).collect()(0)
-      sink.foreach(_(p, report))
-      // per-partition drift BEFORE the manifest commit: like the sink, a
-      // crash mid-drift re-validates (and re-checks) the partition. The
-      // partition df is persisted across the histogram aggregations so N
-      // metrics cost ONE extra partition scan, not N.
-      driftCheck.foreach { dc =>
-        // persist ONLY the projected drift columns: caching the full-width
-        // partition (large text payloads and all) would defeat parquet
-        // column pruning and pressure the same executor storage the
-        // validator's own caches use — N concurrent partitions would pin
-        // N full partitions
-        val pdf = source.readPartition(p).select(dc.columns.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val hs = dc.histograms(pdf)
-          val c = Drift.compare(dc.baseline, hs)
-          dc.onVerdicts(ResumableRunner.PartitionDrift(
-            p, c.verdicts, c.producedNotInBaseline, c.baselineNotProduced, hs))
-        } finally { pdf.unpersist(); () }
-      }
-      val entry = PartitionEntry(
-        partitionId = p, snapshotId = snap, constraintHash = cHash,
-        rowsScanned = if (verdict.isNullAt(0)) 0L else verdict.getLong(0),
-        violations = if (verdict.isNullAt(1)) 0L else verdict.getLong(1),
-        wallMs = (System.nanoTime() - t0) / 1000000L)
-      if (source.partitionSnapshotId(p) != snap) {
-        report.cleanup()
-        throw new IllegalStateException("partition changed during validation")
-      }
-      manifest.record(entry)
-      // release this partition's persisted seq/violations before moving on
-      // — over thousands of partitions the leaked caches would crowd out
-      // executor storage
-      report.cleanup()
-      entry
+      // release this partition's persisted seq/violations on every exit, a
+      // failed sink or drift leg included: leaked caches would crowd out
+      // executor storage over thousands of partitions or a long session
+      try {
+        // one action materializes the partition verdict (rows + violations)
+        val verdict = report.partitionVerdicts
+          .agg(sum(col("rows_scanned")), sum(col("violations"))).collect()(0)
+        sink.foreach(_(p, report))
+        // per-partition drift BEFORE the manifest commit: like the sink, a
+        // crash mid-drift re-validates (and re-checks) the partition. The
+        // partition df is persisted across the histogram aggregations so N
+        // metrics cost ONE extra partition scan, not N.
+        driftCheck.foreach { dc =>
+          // persist ONLY the projected drift columns: caching the full-width
+          // partition (large text payloads and all) would defeat parquet
+          // column pruning and pressure the same executor storage the
+          // validator's own caches use — N concurrent partitions would pin
+          // N full partitions
+          val pdf = source.readPartition(p).select(dc.columns.map(col): _*)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val hs = dc.histograms(pdf)
+            val c = Drift.compare(dc.baseline, hs)
+            dc.onVerdicts(ResumableRunner.PartitionDrift(
+              p, c.verdicts, c.producedNotInBaseline, c.baselineNotProduced, hs))
+          } finally { pdf.unpersist(); () }
+        }
+        val entry = PartitionEntry(
+          partitionId = p, snapshotId = snap, constraintHash = cHash,
+          rowsScanned = if (verdict.isNullAt(0)) 0L else verdict.getLong(0),
+          violations = if (verdict.isNullAt(1)) 0L else verdict.getLong(1),
+          wallMs = (System.nanoTime() - t0) / 1000000L)
+        if (source.partitionSnapshotId(p) != snap)
+          throw new IllegalStateException("partition changed during validation")
+        manifest.record(entry)
+        entry
+      } finally report.cleanup()
     } catch {
       // name the partition: a source fault (a truncated file, a vanished
       // object) otherwise surfaces as a bare Spark task failure

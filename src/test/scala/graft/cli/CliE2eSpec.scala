@@ -133,7 +133,7 @@ class CliE2eSpec extends SparkSuite {
     // a baseline without the text_len metric: the run warns that it is
     // not drift-checked, in a line carrying an em-dash
     val baseline = Files.createTempDirectory("cli-b").resolve("b.json")
-    graft.transcript.Drift.writeSnapshot(baseline,
+    graft.transcript.Drift.writeSnapshot(baseline.toString,
       Map("role" -> Map("user" -> 1L, "assistant" -> 1L)))
     val (code, out) = runCliIn(Map("LC_ALL" -> "C"))(
       "transcripts", "--table", root, "--baseline", baseline.toString)

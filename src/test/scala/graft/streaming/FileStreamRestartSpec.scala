@@ -93,6 +93,49 @@ class FileStreamRestartSpec extends SparkSuite {
       DupViolation("B", 3, "seq_gap")), s"phase 2 after restart: $p2")
   }
 
+  test("a restart after a state-schema change fails and names the incompatibility") {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val root = Files.createTempDirectory("fsr-state").toString
+    val input = s"$root/in"
+    val ck = s"$root/ck"
+    def writeBatch(name: String, rows: Seq[(String, Int, java.sql.Timestamp)]): Unit =
+      rows.toDF("conv_id", "turn_idx", "ts").coalesce(1).write.parquet(s"$input/$name")
+    val schema = StructType(Seq(
+      StructField("conv_id", StringType), StructField("turn_idx", IntegerType),
+      StructField("ts", TimestampType)))
+    def events = spark.readStream.schema(schema).parquet(s"$input/*").as[TsTurnEvent]
+    def start(violations: org.apache.spark.sql.Dataset[DupViolation]) =
+      violations.writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[DupViolation], _: Long) =>
+          batch.collect(); ()
+        }
+        .option("checkpointLocation", ck)
+        .start()
+
+    // the checkpoint of an earlier build: same source, key and operator,
+    // but its state is a turn count, not SeqCheckState
+    writeBatch("b1", Seq(("A", 0, ts("2026-01-01 00:00:00")), ("A", 1, ts("2026-01-01 00:01:00"))))
+    val q1 = start(events.groupByKey(_.conv_id)
+      .flatMapGroupsWithState[FileStreamRestartSpec.TurnCount, DupViolation](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, evs: Iterator[TsTurnEvent], st: GroupState[FileStreamRestartSpec.TurnCount]) =>
+          st.update(FileStreamRestartSpec.TurnCount(st.getOption.fold(0L)(_.turns) + evs.size))
+          Iterator.empty
+      })
+    try q1.processAllAvailable() finally q1.stop()
+
+    // the restart runs a new batch, which must load the old state store
+    writeBatch("b2", Seq(("A", 2, ts("2026-01-01 00:02:00"))))
+    val q2 = start(StreamingValidator.statefulTranscriptCheck(events, idleTimeoutMs = 0))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q2.processAllAvailable() finally q2.stop()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(messages.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"), messages.take(2000))
+  }
+
   test("windowed drift monitor survives a checkpoint restart on a file source") {
     import graft.transcript.{Drift, StatsProfiler}
     val root = Files.createTempDirectory("fsr-drift").toString
@@ -152,4 +195,10 @@ class FileStreamRestartSpec extends SparkSuite {
     assert(seen2.map(_._1) == List("00:01"), s"phase 2 emits exactly window 00:01: $seen2")
     assert(seen2.head._2, "the all-short window must flag drift after the restart")
   }
+}
+
+object FileStreamRestartSpec {
+  /** State of a stand-in earlier build's query: a turn count per
+    * conversation instead of [[StreamingValidator.SeqCheckState]]. */
+  final case class TurnCount(turns: Long)
 }

@@ -184,6 +184,8 @@ class ResumableRunnerSpec extends SparkSuite {
     // touching Spark or the manifest
     val failing: (Int, TranscriptReport) => Unit = (p, _) =>
       if (p <= 1) throw new RuntimeException(s"sink boom p$p") else ()
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
     val e = intercept[Exception] {
       new ResumableRunner(source, new CheckpointManifest(mpath),
         new TranscriptValidator(), None, Some(failing), maxConcurrent = 2).run()
@@ -192,6 +194,7 @@ class ResumableRunnerSpec extends SparkSuite {
       s"failure must propagate, got $e")
     assert(new CheckpointManifest(mpath).load().isEmpty,
       "no partition may commit after the cohort failed before any commit")
+    assert(cm.isEmpty, "a failed partition must release its persisted seq/violations")
     // resume with a healthy sink validates everything
     val ok = new ResumableRunner(source, new CheckpointManifest(mpath),
       new TranscriptValidator(), None, None, maxConcurrent = 2).run()

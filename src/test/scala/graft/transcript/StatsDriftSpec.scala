@@ -80,7 +80,7 @@ class StatsDriftSpec extends SparkSuite {
     val file = dir.resolve("baseline.json")
     java.nio.file.Files.writeString(file, "{\"trunc") // a crashed earlier write
     val snap = Map("role" -> Map("user" -> 3L), "text_len" -> Map("0" -> 1L, "<null>" -> 2L))
-    Drift.writeSnapshot(file, snap)
+    Drift.writeSnapshot(file.toString, snap)
     assert(Drift.snapshotFromJson(java.nio.file.Files.readString(file)) == snap)
     val left = java.nio.file.Files.list(dir)
     try assert(left.toArray.toSeq == Seq(file), "no .tmp sibling may be left behind")
