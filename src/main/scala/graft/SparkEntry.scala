@@ -538,25 +538,24 @@ object SparkEntry {
       val e = embeddings(s, dir)
       val queries = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      // digest-guarded persisted centroid artifact (r5 verdict item 3):
+      // lineage-keyed persisted centroid artifact (r5 verdict item 3):
       // repeated ANN over an unchanged corpus skips k-means. Keyed by the
-      // lineage layer's file-metadata snapshot id (one cheap FS listing —
-      // path+length+mtime, content-edge-block hardening available via
-      // contentDigest=true), so the loaded path costs no row I/O; a
-      // rewritten corpus flips the snapshot and retrains. The full-scan
-      // content-digest overload stays for callers without a trustworthy
-      // file-metadata story.
+      // table snapshot id (one FS listing plus two edge-block reads per
+      // file), so the loaded path costs no row I/O; a rewritten corpus
+      // flips the snapshot and retrains. The artifact lives in the
+      // session's own scratch directory, deleted when the session stops:
+      // a run's first call trains, its later calls load, and no other
+      // checkout or run ever serves it centroids.
       // 128-bit hex of the dir key (r6 advice): the old 32-bit hash
       // across many corpora risked artifact-path collisions, surfacing
       // as retrain churn between corpora sharing a path
-      val artifact = s"/tmp/graft-centroids/ivf_${
+      val artifact = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), s"ivf_${
         java.security.MessageDigest.getInstance("SHA-256")
-          .digest(dir.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString}.json"
+          .digest(dir.getBytes("UTF-8")).take(16).map("%02x".format(_)).mkString}.json").toURI.toString
       val snapshot = new graft.io.ParquetPartitionedSource(
         s, s"$dir/embeddings.parquet").snapshotId
       val (centroids, trained) = Similarity.trainOrLoadCentroids(
-        e, "vec_id", "embedding", nLists = 32, artifactPath = artifact,
-        digest = snapshot, maxSamples = 8192, iters = 8)
+        e, "vec_id", "embedding", nLists = 32, artifactPath = artifact, lineage = snapshot)
       System.err.println(
         s"q_ann_ivf centroids: ${if (trained) "trained" else "loaded"} ($artifact)")
       Similarity.ivfTopK(e, "vec_id", "embedding", queries, "query_id", "qvec",

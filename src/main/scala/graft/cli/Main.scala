@@ -71,11 +71,11 @@ object Main {
     if (hadViolations) sys.exit(65)
   }
 
-  /** IVF ANN with the digest-guarded persisted centroid artifact
-    * (ops.Similarity.trainOrLoadCentroids): the first run over a corpus
-    * trains k-means and commits the artifact; later runs over the
-    * UNCHANGED corpus load it (one small read, no training); a corpus
-    * content change flips the digest and retrains. Prints
+  /** IVF ANN with the persisted centroid artifact keyed by the table
+    * snapshot id (ops.Similarity.trainOrLoadCentroids): the first run over
+    * a corpus trains k-means and commits the artifact; later runs over the
+    * UNCHANGED corpus load it (one small read, no Spark job, no training);
+    * a corpus change flips the snapshot id and retrains. Prints
     * `ann centroids: trained|loaded` so operators (and the e2e spec) can
     * see which path ran. */
   private def runAnn(spark: SparkSession, opts: Map[String, String]): Boolean = {
@@ -86,9 +86,9 @@ object Main {
     val nLists = opts.get("n-lists").fold(32)(_.toInt)
     val k = opts.get("k").fold(5)(_.toInt)
     val nProbe = opts.get("n-probe").fold(4)(_.toInt)
-    val items = spark.read.parquet(table)
+    lazy val items = spark.read.parquet(table) // a load needs no schema inference
     val (cents, trained) = graft.ops.Similarity.trainOrLoadCentroids(
-      items, idCol, vecCol, nLists, artifact)
+      items, idCol, vecCol, nLists, artifact, new ParquetPartitionedSource(spark, table).snapshotId)
     println(s"ann centroids: ${if (trained) "trained" else "loaded"} ($artifact, " +
       s"nLists=${cents.length})")
     val queries = opts.get("queries") match {
@@ -243,11 +243,7 @@ object Main {
   }
 
   private def runTranscripts(spark: SparkSession, opts: Map[String, String]): Boolean = {
-    // --content-digest: snapshot ids additionally hash each file's edge
-    // blocks, so a same-length same-mtime rewrite (object-store copy with
-    // preserved timestamps) still invalidates the partition's checkpoint
-    val source = new ParquetPartitionedSource(spark, opts("table"),
-      contentDigest = opts.contains("content-digest"))
+    val source = new ParquetPartitionedSource(spark, opts("table"))
     val convKeys = opts.get("conv-keys").map(p => spark.read.parquet(p))
     val validator = new TranscriptValidator()
 
@@ -383,11 +379,11 @@ object Main {
     "kye" -> Set("schema", "data", "model", "violations", "parity", "row-key", "compile",
       "max-group-values"),
     "transcripts" -> Set("table", "conv-keys", "checkpoint", "violations", "baseline",
-      "write-baseline", "content-digest", "max-concurrent", "partition-timeout-ms"),
+      "write-baseline", "max-concurrent", "partition-timeout-ms"),
     "ann" -> Set("table", "centroids", "id", "vec", "n-lists", "k", "n-probe", "queries", "out"))
 
   /** Options that are bare flags; every other option REQUIRES a value. */
-  private val boolFlags = Set("parity", "content-digest")
+  private val boolFlags = Set("parity")
 
   /** What each mode cannot run without: one option of every group. */
   private val requiredOptions: Map[String, Seq[Seq[String]]] = Map(
@@ -466,14 +462,14 @@ object Main {
       |                 [--max-group-values K]
       |  graft.cli.Main transcripts --table dir [--conv-keys path] [--checkpoint m.json]
       |                 [--violations out] [--baseline h.json] [--write-baseline h.json]
-      |                 [--content-digest] [--max-concurrent N] [--partition-timeout-ms MS]
+      |                 [--max-concurrent N] [--partition-timeout-ms MS]
       |  graft.cli.Main ann --table items.parquet --centroids artifact.json
       |                 [--id vec_id] [--vec embedding] [--n-lists 32] [--k 5]
       |                 [--n-probe 4] [--queries q.parquet] [--out dir]
       |
       |  ann trains IVF centroids on first run and persists them to
-      |  --centroids; an unchanged corpus loads the artifact (no retrain),
-      |  a content change retrains (digest guard).
+      |  --centroids, keyed by the table's snapshot id; an unchanged table
+      |  loads the artifact (no retrain), a changed one retrains.
       |
       |  --partition-timeout-ms default is 21600000 (6 h): any partition task
       |  exceeding it FAILS the cohort loudly (committed partitions stay

@@ -10,14 +10,17 @@ object Digests {
     md.digest().take(8).map("%02x".format(_)).mkString
   }
 
+  /** Bytes digested at each end of a file by [[fileContentDigest]]. */
+  private val EdgeBlock = 65536
+
   /** Cheap content fingerprint of a file: length + SHA-256 over the first
-    * and last `blockSize` bytes. O(128 KiB) of IO per file regardless of
+    * and last [[EdgeBlock]] bytes. O(128 KiB) of IO per file regardless of
     * file size — parquet rewrites virtually always change the footer
     * (row-group offsets/stats live there), and compressed identical-length
     * rewrites that keep BOTH edge blocks identical are adversarial, not
-    * operational. Used by the digest snapshot mode to catch same-mtime
-    * rewrites (coarse filesystems, object-store copies that preserve
-    * timestamps) that an mtime-based snapshot id misses.
+    * operational. Part of every table snapshot id, so a same-mtime
+    * rewrite (coarse filesystems, object-store copies that preserve
+    * timestamps) still changes the id.
     *
     * Reads through the Hadoop FileSystem API so the same code digests
     * `file:`, `hdfs://`, and `s3a://` tables. Two seeked 64-KiB reads map
@@ -25,18 +28,17 @@ object Digests {
     * length comes from the already-fetched FileStatus, not a second
     * metadata round-trip. */
   def fileContentDigest(fs: org.apache.hadoop.fs.FileSystem,
-                        status: org.apache.hadoop.fs.FileStatus,
-                        blockSize: Int = 65536): String =
+                        status: org.apache.hadoop.fs.FileStatus): String =
     try {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       val len = status.getLen
       val in = fs.open(status.getPath)
       try {
-        val head = new Array[Byte](math.min(blockSize.toLong, len).toInt)
+        val head = new Array[Byte](math.min(EdgeBlock.toLong, len).toInt)
         in.readFully(0L, head)
         md.update(head)
-        if (len > blockSize) {
-          val tail = new Array[Byte](math.min(blockSize.toLong, len - blockSize).toInt)
+        if (len > EdgeBlock) {
+          val tail = new Array[Byte](math.min(EdgeBlock.toLong, len - EdgeBlock).toInt)
           in.readFully(len - tail.length, tail)
           md.update(tail)
         }
@@ -44,7 +46,7 @@ object Digests {
       md.update(len.toString.getBytes("UTF-8"))
       md.digest().take(8).map("%02x".format(_)).mkString
     } catch {
-      // TOCTOU: digest mode exists FOR tables being rewritten underneath
+      // TOCTOU: snapshot ids exist FOR tables being rewritten underneath
       // the validator, so a file deleted/truncated between listing and
       // read must degrade to "changed" (re-validate next run), never
       // crash the resumable runner mid-flight

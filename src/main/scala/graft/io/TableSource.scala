@@ -38,16 +38,8 @@ trait TableSource {
   * A missing or partition-less root RAISES from `partitionIds()` rather
   * than silently validating nothing (a typo'd `--table` must not print a
   * zero-row success).
-  *
-  * @param contentDigest snapshot-id mode. `false` (default): listing +
-  *   size + mtime — zero data IO, but a rewrite that preserves length AND
-  *   mtime (coarse-granularity filesystems, object-store copies with
-  *   preserved timestamps) keeps the id, so the resumable runner would
-  *   falsely skip the partition. `true`: additionally digests each file's
-  *   first/last 64 KiB (Digests.fileContentDigest) — O(128 KiB) IO per
-  *   file, catches same-mtime rewrites. */
-class ParquetPartitionedSource(spark: SparkSession, root: String,
-                               contentDigest: Boolean = false) extends TableSource {
+  */
+class ParquetPartitionedSource(spark: SparkSession, root: String) extends TableSource {
 
   private val rootPath = new Path(root)
   // FileSystem.get-style caching is handled by Hadoop itself (FS cache is
@@ -61,41 +53,46 @@ class ParquetPartitionedSource(spark: SparkSession, root: String,
     try fs.listStatus(p).toSeq
     catch { case _: java.io.FileNotFoundException => Nil }
 
-  /** Snapshot id = stable digest of the partition directory listing +
-    * file sizes + modification times (+ edge-block content digests in
-    * contentDigest mode). mtime matters: a file rewritten in place with
-    * same-length content would otherwise keep its snapshot id and the
-    * resumable runner would skip re-validating changed data — a false
-    * "already validated" is strictly worse than the false re-validation an
-    * mtime-only touch causes. (A real Iceberg catalog supplies real
-    * snapshot ids; this is the stand-in.) */
-  private def fingerprintFiles(files: Seq[FileStatus]): String =
+  /** Snapshot id = stable digest, over every file under `dir` that Spark's
+    * reader would read (any depth; path components starting with `_` or
+    * `.` are skipped as Spark skips them, `_`-prefixed `k=v` partition
+    * directories excepted), of each file's path relative to the table
+    * root, size, mtime and edge-block content digest
+    * ([[Digests.fileContentDigest]]). The content digest catches a rewrite
+    * that keeps length AND mtime (coarse-granularity filesystems,
+    * object-store copies with preserved timestamps): a false "already
+    * validated" is strictly worse than the false re-validation an
+    * mtime-only touch causes. A directory deleted while it is listed
+    * (TOCTOU under concurrent maintenance) degrades to the empty-listing
+    * digest — it compares unequal to any recorded id with data, forcing
+    * re-validation, the safe direction. (A real Iceberg catalog supplies
+    * real snapshot ids; this is the stand-in.) */
+  private def fingerprint(dir: Path): String = {
+    val base = fs.makeQualified(rootPath).toUri.getPath.stripSuffix("/")
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    val files = try {
+      val it = fs.listFiles(dir, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toList
+    } catch { case _: java.io.FileNotFoundException => Nil }
     graft.io.Digests.sha8(files
-      .filter(st => !st.isDirectory && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val content =
-          if (contentDigest) ":" + graft.io.Digests.fileContentDigest(fs, st) else ""
-        s"${st.getPath.getParent.getName}/${st.getPath.getName}:${st.getLen}:${st.getModificationTime}$content"
+      .map(st => st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/") -> st)
+      .filterNot { case (rel, _) => rel.split('/').exists(hidden) }
+      .map { case (rel, st) =>
+        s"$rel:${st.getLen}:${st.getModificationTime}:${graft.io.Digests.fileContentDigest(fs, st)}"
       }
       .sorted.mkString("\n"))
+  }
 
   override def snapshotId: String = {
     require(fs.exists(rootPath),
       s"table root does not exist: $root — check the --table path")
-    val files = listOrEmpty(rootPath).flatMap { st =>
-      if (st.isDirectory) listOrEmpty(st.getPath) else Seq(st)
-    }
-    fingerprintFiles(files)
+    fingerprint(rootPath)
   }
 
   /** Partition-grain lineage: only this partition's files participate, so
-    * appends/rewrites elsewhere don't invalidate it. A partition directory
-    * deleted between listing and fingerprinting (TOCTOU under concurrent
-    * maintenance) degrades to the empty-listing digest — it will compare
-    * unequal to any recorded id with data, forcing re-validation, which is
-    * the safe direction. */
+    * appends/rewrites elsewhere don't invalidate it. */
   override def partitionSnapshotId(p: Int): String =
-    fingerprintFiles(listOrEmpty(new Path(rootPath, s"partition_id=$p")))
+    fingerprint(new Path(rootPath, s"partition_id=$p"))
 
   override def partitionIds(): Seq[Int] = {
     require(fs.exists(rootPath),

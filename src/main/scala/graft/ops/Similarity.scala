@@ -180,37 +180,17 @@ object Similarity {
     centroids
   }
 
-  /** Persisted coarse quantizer: centroids + the digest of the corpus they
-    * were trained on. At 100 TB the operational pattern is many ANN
-    * invocations over an unchanged corpus — training is deterministic but
-    * not free (a bounded sample scan + driver k-means), so the artifact
-    * makes re-runs skip it, and the digest makes a stale artifact
-    * impossible to use silently. */
-  final case class CentroidIndex(corpusDigest: String, centroids: Array[Array[Double]])
+  /** Persisted coarse quantizer: centroids + the lineage key (the table
+    * snapshot id) of the corpus they were trained on. At 100 TB the
+    * operational pattern is many ANN invocations over an unchanged corpus
+    * — training is deterministic but not free (a bounded sample scan +
+    * driver k-means), so the artifact makes re-runs skip it, and the key
+    * makes a stale artifact impossible to use silently. */
+  final case class CentroidIndex(lineage: String, centroids: Array[Array[Double]])
 
-  /** Order-insensitive corpus digest over (id, vector) pairs: one small
-    * aggregate job over per-row hashes. count + bit_xor alone is NOT
-    * enough — xor cancels duplicate rows pairwise, so {A,A} and {B,B}
-    * would collide — so a decimal(38,0) SUM of the hashes rides along
-    * (1e12 rows × 2^63 ≈ 1e31 « 1e38, no ANSI overflow, still
-    * order-insensitive). Excludes null/empty vectors, mirroring
-    * [[trainCentroids]]'s sample universe.
-    *
-    * COST NOTE: this scans the full (id, vector) projection — about the
-    * same I/O as the bounded training scan it lets you skip. When cheap
-    * lineage exists (e.g. partition content digests from the lineage
-    * layer), pass it to the `digest`-taking [[trainOrLoadCentroids]]
-    * overload instead of calling this. */
-  def corpusDigest(df: DataFrame, idCol: String, vecCol: String): String = {
-    val r = df.filter(col(vecCol).isNotNull && size(col(vecCol)) > 0)
-      .select(xxhash64(col(idCol), col(vecCol).cast("array<double>")).as("_h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(_h)").as("x"),
-           sum(col("_h").cast("decimal(38,0)")).as("s"))
-      .collect()(0)
-    val x = java.lang.Long.toHexString(if (r.isNullAt(1)) 0L else r.getLong(1))
-    val s = if (r.isNullAt(2)) "0" else r.getDecimal(2).toBigInteger.toString(16)
-    s"${r.getLong(0)}:$x:$s"
-  }
+  /** The artifact's JSON key for [[CentroidIndex.lineage]], unchanged since
+    * `_format` 1: an artifact keyed the old way parses and retrains. */
+  private val LineageKey = "corpusDigest"
 
   /** Write the centroid artifact (JSON) through [[graft.io.TextFile]]: any
     * Hadoop FileSystem scheme, and never truncated JSON at the path, which
@@ -218,7 +198,7 @@ object Similarity {
   def saveCentroids(spark: org.apache.spark.sql.SparkSession, path: String,
                     index: CentroidIndex): Unit = {
     val json = new ObjectMapper().registerModule(DefaultScalaModule).writeValueAsString(ListMap(
-      "_format" -> 1, "corpusDigest" -> index.corpusDigest, "nLists" -> index.centroids.length,
+      "_format" -> 1, LineageKey -> index.lineage, "nLists" -> index.centroids.length,
       "dim" -> index.centroids.headOption.fold(0)(_.length), "centroids" -> index.centroids))
     graft.io.TextFile.write(path, json, spark.sparkContext.hadoopConfiguration)
   }
@@ -229,47 +209,33 @@ object Similarity {
     graft.io.TextFile.read(path, spark.sparkContext.hadoopConfiguration).map { text =>
       val root = new ObjectMapper().readTree(text)
       require(root.path("_format").asInt() == 1, s"unsupported centroid artifact format in $path")
-      val (cents, digest, dim) = (root.get("centroids"), root.get("corpusDigest"), root.get("dim"))
-      require(cents != null && cents.isArray && digest != null && dim != null,
-        s"malformed centroid artifact in $path (missing centroids/corpusDigest/dim)")
+      val (cents, lineage, dim) = (root.get("centroids"), root.get(LineageKey), root.get("dim"))
+      require(cents != null && cents.isArray && lineage != null && dim != null,
+        s"malformed centroid artifact in $path (missing centroids/$LineageKey/dim)")
       val arr = Array.tabulate(cents.size()) { i =>
         val row = cents.get(i)
         Array.tabulate(row.size())(j => row.get(j).asDouble())
       }
       require(arr.forall(_.length == dim.asInt()), s"ragged centroid artifact in $path")
-      CentroidIndex(digest.asText(), arr)
+      CentroidIndex(lineage.asText(), arr)
     }
 
-  /** Train-or-load: reuse the persisted centroids when their corpus digest
-    * matches the current corpus, retrain (and overwrite the artifact)
-    * otherwise. Returns the centroids plus whether training ran.
-    *
-    * This overload computes [[corpusDigest]] itself — a full scan of the
-    * (id, vector) projection, roughly the cost of the bounded training
-    * scan it can skip. It buys change DETECTION, not scan avoidance; when
-    * the caller already has cheap lineage (partition content digests, a
-    * table snapshot id), use the explicit-`digest` overload below and the
-    * cache hit costs no row I/O at all. */
-  def trainOrLoadCentroids(df: DataFrame, idCol: String, vecCol: String,
+  /** Train-or-load keyed by the corpus's lineage (its table snapshot id,
+    * [[graft.io.TableSource.snapshotId]]): reuse the persisted centroids
+    * when their key matches, retrain (and overwrite the artifact)
+    * otherwise. `df` is evaluated only to train: a cache hit is one small
+    * artifact read and starts no Spark job (not even the parquet schema
+    * inference behind a `spark.read`). Returns the centroids plus whether
+    * training ran. */
+  def trainOrLoadCentroids(df: => DataFrame, idCol: String, vecCol: String,
                            nLists: Int, artifactPath: String,
-                           maxSamples: Int = 8192, iters: Int = 8): (Array[Array[Double]], Boolean) =
-    trainOrLoadCentroids(df, idCol, vecCol, nLists, artifactPath,
-      corpusDigest(df, idCol, vecCol), maxSamples, iters)
-
-  /** Train-or-load keyed by a CALLER-SUPPLIED corpus digest (e.g. the
-    * lineage layer's partition content digest) — the 100 TB pattern: a
-    * cache hit is one small artifact read, zero row scans. The caller owns
-    * digest fidelity: a key that does not change when the corpus does will
-    * serve stale centroids. */
-  def trainOrLoadCentroids(df: DataFrame, idCol: String, vecCol: String,
-                           nLists: Int, artifactPath: String, digest: String,
-                           maxSamples: Int, iters: Int): (Array[Array[Double]], Boolean) = {
-    val spark = df.sparkSession
+                           lineage: String): (Array[Array[Double]], Boolean) = {
+    val spark = org.apache.spark.sql.SparkSession.active
     loadCentroids(spark, artifactPath) match {
-      case Some(idx) if idx.corpusDigest == digest => (idx.centroids, false)
+      case Some(idx) if idx.lineage == lineage => (idx.centroids, false)
       case _ =>
-        val cents = trainCentroids(df, idCol, vecCol, nLists, maxSamples, iters)
-        saveCentroids(spark, artifactPath, CentroidIndex(digest, cents))
+        val cents = trainCentroids(df, idCol, vecCol, nLists)
+        saveCentroids(spark, artifactPath, CentroidIndex(lineage, cents))
         (cents, true)
     }
   }

@@ -160,11 +160,10 @@ class ResumableRunner(
     // and validateOne re-reads each one before its commit: a partition
     // that changed in between (data landing, a directory deleted) fails
     // instead of committing under a listing it no longer has (one more
-    // listing per partition; in contentDigest mode also its edge-block
-    // reads). The snapshot phase shares the concurrency bound: in
-    // contentDigest mode against an object store it is two ranged GETs per
-    // file, and a serial prelude over thousands of partitions would idle
-    // the cluster before any validation begins.
+    // listing and edge-block read per partition). The snapshot phase
+    // shares the concurrency bound: against an object store it is two
+    // ranged GETs per file, and a serial prelude over thousands of
+    // partitions would idle the cluster before any validation begins.
     val snaps = boundedTraverse(source.partitionIds(), (p: Int) => s"snapshot p=$p")(
       p => p -> source.partitionSnapshotId(p))
     val (skipped, todo) = snaps.partition { case (p, snap) =>

@@ -7,6 +7,7 @@ import graft.schema._
 import graft.expr.ExprCompiler
 
 import scala.collection.mutable.ListBuffer
+import scala.util.control.NonFatal
 
 /** @param strictReferenceParity when true, reproduce the reference loader
   *   exactly: skip assertions referencing more than one column (kyepy
@@ -47,7 +48,6 @@ final case class ValidatorConfig(
 final case class ValidationResult(
     violations: DataFrame,
     survivors: Option[DataFrame],
-    droppedColumns: Seq[String],
     cached: Seq[DataFrame] = Nil) {
   def cleanup(): Unit = cached.foreach(_.unpersist())
 }
@@ -85,6 +85,16 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
   import Validator.{RowId => rowId}
 
   def validate(modelName: String, input: DataFrame): ValidationResult = {
+    val cachedDfs = ListBuffer.empty[DataFrame]
+    // a stage that throws (an unsupported assertion shape, a failed parity
+    // flag job) must not leave the earlier stages' caches registered for
+    // the life of the session
+    try stages(modelName, input, cachedDfs)
+    catch { case NonFatal(e) => cachedDfs.foreach(_.unpersist()); throw e }
+  }
+
+  private def stages(modelName: String, input: DataFrame,
+                     cachedDfs: ListBuffer[DataFrame]): ValidationResult = {
     val spark = input.sparkSession
     require(input.columns.contains(rowId),
       s"input must carry a stable row-id column '$rowId' (use Validator.withRowIds)")
@@ -92,11 +102,9 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
       throw new IllegalArgumentException(s"Source '$modelName' not found"))
 
     val violations = ListBuffer.empty[DataFrame]
-    val cachedDfs = ListBuffer.empty[DataFrame]
-    var droppedCols: Seq[String] = Nil // set by S1; abort paths report it too
     def cached(d: DataFrame): DataFrame = { val c = d.cache(); cachedDfs += c; c }
     def abort(): ValidationResult =
-      ValidationResult(unionAll(spark, violations.toList), None, droppedCols, cachedDfs.toSeq)
+      ValidationResult(unionAll(spark, violations.toList), None, cachedDfs.toSeq)
     // parity: every reference empty-abort sits under a mask/drop guard
     // (`if not mask.all():` / `if len(drop_columns):`, loader.py:113-200)
     // — a table that was ALREADY empty flows through to an empty survivors
@@ -109,7 +117,6 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
       model.edges.values.map(e => e.title.getOrElse(e.name) -> e.name).toMap
     val dataColsIn = input.columns.filterNot(_ == rowId)
     val (known, dropped) = dataColsIn.partition(colNameMap.contains)
-    droppedCols = dropped.toSeq
     if (dropped.nonEmpty)
       System.err.println(s"Warning: Table '${model.name}' had extra columns: ${dropped.mkString(",")}")
     if (known.isEmpty) return abort() // all columns dropped ⇒ empty table (loader.py:64-65)
@@ -563,7 +570,7 @@ class Validator(schema: CompiledSchema, config: ValidatorConfig = ValidatorConfi
 
     // ---- S8: surviving grouped table ---------------------------------------
     val survivors = gdf.select(dataCols.map(col): _*)
-    ValidationResult(unionAll(spark, violations.toList), Some(survivors), dropped.toSeq, cachedDfs.toSeq)
+    ValidationResult(unionAll(spark, violations.toList), Some(survivors), cachedDfs.toSeq)
   }
 
   // ---- S3 impl -------------------------------------------------------------

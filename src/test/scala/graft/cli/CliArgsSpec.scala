@@ -13,10 +13,10 @@ class CliArgsSpec extends AnyFunSuite {
       "--parity", "--max-group-values", "5") ==
       Right("kye" -> Map("schema" -> "s.kye", "data" -> "t.parquet", "model" -> "M",
         "parity" -> "true", "max-group-values" -> "5")))
-    assert(parse("transcripts", "--table", "d", "--checkpoint", "m.json", "--content-digest",
+    assert(parse("transcripts", "--table", "d", "--checkpoint", "m.json",
       "--max-concurrent", "2") ==
       Right("transcripts" -> Map("table" -> "d", "checkpoint" -> "m.json",
-        "content-digest" -> "true", "max-concurrent" -> "2")))
+        "max-concurrent" -> "2")))
     assert(parse("ann", "--table", "t", "--centroids", "c.json", "--k", "3") ==
       Right("ann" -> Map("table" -> "t", "centroids" -> "c.json", "k" -> "3")))
   }
@@ -24,6 +24,9 @@ class CliArgsSpec extends AnyFunSuite {
   test("a misspelt option is rejected, not ignored") {
     assert(parse("transcripts", "--table", "d", "--checkpiont", "m.json") ==
       Left("unknown option --checkpiont"))
+    // every snapshot id is content-checked: no flag selects that any more
+    assert(parse("transcripts", "--table", "d", "--content-digest") ==
+      Left("unknown option --content-digest"))
   }
 
   test("an option of another mode is rejected") {

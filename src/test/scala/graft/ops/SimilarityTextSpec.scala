@@ -196,14 +196,17 @@ class SimilarityTextSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("centroids").toString
     val path = s"$dir/ivf_centroids.json"
     assert(Similarity.loadCentroids(spark, path).isEmpty, "absent artifact is None")
-    // first invocation trains and persists
-    val (c1, trained1) = Similarity.trainOrLoadCentroids(emb, "vec_id", "embedding", 16, path)
+    // the lineage key is an input: the caller's table snapshot id, never a
+    // scan of the rows. First invocation trains and persists
+    val (c1, trained1) =
+      Similarity.trainOrLoadCentroids(emb, "vec_id", "embedding", 16, path, "snapshot-v1")
     assert(trained1, "first run must train")
     // artifact round-trips exactly (doubles via JVM toString round-trip)
     val loaded = Similarity.loadCentroids(spark, path).get
     assert(loaded.centroids.map(_.toSeq).toSeq == c1.map(_.toSeq).toSeq)
-    // second invocation over the UNCHANGED corpus skips training
-    val (c2, trained2) = Similarity.trainOrLoadCentroids(emb, "vec_id", "embedding", 16, path)
+    // second invocation under the SAME key skips training
+    val (c2, trained2) =
+      Similarity.trainOrLoadCentroids(emb, "vec_id", "embedding", 16, path, "snapshot-v1")
     assert(!trained2, "unchanged corpus must reuse the artifact")
     assert(c2.map(_.toSeq).toSeq == c1.map(_.toSeq).toSeq)
     // ...and serves the same query results as a fresh training
@@ -213,12 +216,11 @@ class SimilarityTextSpec extends SparkSuite {
         queries, "query_id", "qvec", k = 1, c2, nProbe = 2)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("item_id"))).toSet
     assert((0L until 5L).forall(q => viaArtifact.contains((q, q))))
-    // a corpus change flips the digest -> retrain + overwrite
-    val changed = emb.filter(col("vec_id") =!= 0)
-    val (_, trained3) = Similarity.trainOrLoadCentroids(changed, "vec_id", "embedding", 16, path)
-    assert(trained3, "changed corpus must retrain")
-    assert(Similarity.loadCentroids(spark, path).get.corpusDigest ==
-      Similarity.corpusDigest(changed, "vec_id", "embedding"))
+    // a moved key (the corpus changed) -> retrain + overwrite
+    val (_, trained3) =
+      Similarity.trainOrLoadCentroids(emb, "vec_id", "embedding", 16, path, "snapshot-v2")
+    assert(trained3, "a changed lineage key must retrain")
+    assert(Similarity.loadCentroids(spark, path).get.lineage == "snapshot-v2")
     // corrupt artifact raises (corrupt != absent) — written through the
     // same Hadoop FS so the local checksum sidecar stays consistent
     val hp = new org.apache.hadoop.fs.Path(path)
@@ -237,37 +239,27 @@ class SimilarityTextSpec extends SparkSuite {
     emb.unpersist()
   }
 
-  test("corpus digest: duplicate-row corpora do not collide (xor pair-cancellation)") {
-    import spark.implicits._
-    // {A,A} vs {B,B}: per-row hashes xor to 0 in both — the decimal-sum
-    // component must keep the digests distinct
-    val a = Seq((1L, Seq(1.0f, 0.0f)), (1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    val b = Seq((2L, Seq(0.0f, 1.0f)), (2L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
-    val da = Similarity.corpusDigest(a, "vec_id", "embedding")
-    val db = Similarity.corpusDigest(b, "vec_id", "embedding")
-    assert(da != db, s"pairwise-duplicated corpora must not share a digest: $da")
-    // same rows, different order -> same digest (order-insensitive)
-    val a2 = Seq((1L, Seq(1.0f, 0.0f)), (3L, Seq(0.5f, 0.5f))).toDF("vec_id", "embedding")
-    val a2r = Seq((3L, Seq(0.5f, 0.5f)), (1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    assert(Similarity.corpusDigest(a2, "vec_id", "embedding") ==
-      Similarity.corpusDigest(a2r, "vec_id", "embedding"))
-  }
-
   test("caller-supplied digest keys the centroid artifact without a corpus scan") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("centroids_lineage").toString
     val path = s"$dir/ivf_centroids.json"
+    // the corpus is passed by name: count how often it is built
+    var built = 0
+    def corpus = { built += 1; emb }
     val (c1, trained1) = Similarity.trainOrLoadCentroids(
-      emb, "vec_id", "embedding", 16, path, "snapshot-v1", 8192, 8)
+      corpus, "vec_id", "embedding", 16, path, "snapshot-v1")
     assert(trained1)
-    // same lineage key -> reuse, even though we never digested the rows
+    assert(built == 1, "training builds the corpus once")
+    // same lineage key -> reuse without building, let alone scanning, the rows
     val (c2, trained2) = Similarity.trainOrLoadCentroids(
-      emb, "vec_id", "embedding", 16, path, "snapshot-v1", 8192, 8)
+      corpus, "vec_id", "embedding", 16, path, "snapshot-v1")
     assert(!trained2 && c2.map(_.toSeq).toSeq == c1.map(_.toSeq).toSeq)
+    assert(built == 1, "a reused artifact must not touch the corpus")
     // lineage key moved -> retrain
     val (_, trained3) = Similarity.trainOrLoadCentroids(
-      emb, "vec_id", "embedding", 16, path, "snapshot-v2", 8192, 8)
+      corpus, "vec_id", "embedding", 16, path, "snapshot-v2")
     assert(trained3, "a changed lineage key must retrain")
+    assert(built == 2)
   }
 
   test("IVF recall on clustered data whose cluster structure correlates with id order") {

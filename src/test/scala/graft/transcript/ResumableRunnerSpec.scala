@@ -59,37 +59,44 @@ class ResumableRunnerSpec extends SparkSuite {
     assert(run4.skipped.sorted == Seq(0, 2, 3))
   }
 
-  test("content-digest mode catches a same-mtime same-length rewrite") {
-    val root = tmpDir("digest")
-    val data = TranscriptGen.transcripts(spark,
-      TranscriptGen.GenConfig(numConvs = 50, seed = 7, numPartitions = 2))
-    ParquetPartitionedSource.write(data, root)
-    val mtimeSource = new ParquetPartitionedSource(spark, root)
-    val digestSource = new ParquetPartitionedSource(spark, root, contentDigest = true)
-    val mtimeBefore = mtimeSource.partitionSnapshotId(0)
-    val digestBefore = digestSource.partitionSnapshotId(0)
-
-    // rewrite one data file in place: same length, same mtime (coarse-fs /
-    // object-store copy scenario) — flip one byte mid-file and one in the
-    // tail block
-    val f = new java.io.File(s"$root/partition_id=0").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
+  /** Flip one byte mid-file and one in the tail block of `f`, keeping its
+    * length and mtime (coarse-fs / object-store copy scenario). */
+  private def rewriteKeepingLengthAndMtime(f: java.io.File): Unit = {
     val oldMtime = f.lastModified()
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x1).toByte
     bytes(bytes.length - 5) = (bytes(bytes.length - 5) ^ 0x1).toByte
     java.nio.file.Files.write(f.toPath, bytes)
-    assert(f.setLastModified(oldMtime))
+    assert(f.setLastModified(oldMtime) && f.lastModified() == oldMtime)
+  }
 
-    // mtime mode misses the rewrite (the false-skip hazard); digest mode
-    // re-validates
-    assert(mtimeSource.partitionSnapshotId(0) == mtimeBefore,
-      "precondition: the rewrite is invisible to size+mtime")
-    assert(digestSource.partitionSnapshotId(0) != digestBefore,
-      "content digest must change on a same-mtime rewrite")
-    // untouched partition keeps its digest id (no spurious invalidation)
-    assert(digestSource.partitionSnapshotId(1) ==
-      new ParquetPartitionedSource(spark, root, contentDigest = true).partitionSnapshotId(1))
+  test("a same-mtime same-length rewrite changes the snapshot id") {
+    val root = tmpDir("digest")
+    val data = TranscriptGen.transcripts(spark,
+      TranscriptGen.GenConfig(numConvs = 50, seed = 7, numPartitions = 2))
+    ParquetPartitionedSource.write(data, root)
+    val source = new ParquetPartitionedSource(spark, root)
+    val before = source.partitionSnapshotId(0)
+    val untouched = source.partitionSnapshotId(1)
+    rewriteKeepingLengthAndMtime(new java.io.File(s"$root/partition_id=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head)
+    assert(source.partitionSnapshotId(0) != before,
+      "the snapshot id must change on a same-mtime rewrite")
+    // untouched partition keeps its id (no spurious invalidation)
+    assert(source.partitionSnapshotId(1) == untouched)
+  }
+
+  test("snapshot id covers files at any depth of a hive layout") {
+    // a two-level layout (root/a=0/b=0/) is read by Spark in full, so a
+    // rewrite two directories down must change the table's snapshot id
+    val root = tmpDir("nested")
+    spark.range(40).selectExpr("id", "id % 2 AS a", "id % 3 AS b")
+      .write.partitionBy("a", "b").parquet(s"$root/t")
+    val source = new ParquetPartitionedSource(spark, s"$root/t")
+    val before = source.snapshotId
+    rewriteKeepingLengthAndMtime(new java.io.File(s"$root/t/a=0/b=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head)
+    assert(source.snapshotId != before, "a rewrite under a=0/b=0 must change the snapshot id")
   }
 
   test("manifest tolerates legacy/partial entries: missing fields drop to re-validate") {
@@ -316,11 +323,12 @@ class ResumableRunnerSpec extends SparkSuite {
     ParquetPartitionedSource.write(data, localRoot)
     val uriRoot = new java.io.File(localRoot).toURI.toString.stripSuffix("/")
     assert(uriRoot.startsWith("file:"))
-    val source = new ParquetPartitionedSource(spark, uriRoot, contentDigest = true)
+    val source = new ParquetPartitionedSource(spark, uriRoot)
     assert(source.partitionIds() == Seq(0, 1))
     // snapshot ids agree with the plain-path source — the fingerprint is
-    // over (dir/name, size, mtime, digest), independent of URI spelling
-    val plain = new ParquetPartitionedSource(spark, localRoot, contentDigest = true)
+    // over (root-relative path, size, mtime, digest), independent of URI
+    // spelling
+    val plain = new ParquetPartitionedSource(spark, localRoot)
     assert(source.snapshotId == plain.snapshotId)
     assert(source.partitionSnapshotId(0) == plain.partitionSnapshotId(0))
     assert(source.readPartition(1).count() ==

@@ -383,6 +383,27 @@ class ValidatorEdgeCaseSpec extends SparkSuite {
     result.cleanup()
   }
 
+  test("S4 throwing leaves no stage cache registered in the session") {
+    // S3's cache is registered before S4 compiles its assertions; a
+    // multi-edge assertion over an array edge throws there, and the cache
+    // must not outlive the failed call
+    spark.catalog.clearCache()
+    val schema = CompiledSchema.load(
+      """{"models": {"M": {"index": "id", "edges": {
+        |  "id": {"type": "Number"},
+        |  "tags": {"type": "String", "many": true}, "name": {"type": "String"}},
+        |  "assertions": [{"msg": "tags equal name",
+        |    "expr": [{"col": "tags"}, {"col": "name"}, {"eq": null}]}]}}}""".stripMargin)
+    val data = df(
+      StructType(Seq(
+        StructField("id", LongType), StructField("tags", ArrayType(StringType)),
+        StructField("name", StringType), StructField("_row", LongType, nullable = false))),
+      Seq(Row(1L, Seq("a"), "a", 0L)))
+    intercept[UnsupportedOperationException](new Validator(schema).validate("M", data))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the S3 stage cache must be unpersisted when a later stage throws")
+  }
+
   test("S6: array-typed edge keeps exact per-element distinct semantics under the cap") {
     val schema = CompiledSchema.load(
       """{"models": {"M": {"index": "id", "edges": {
